@@ -1071,6 +1071,41 @@ CCNET_MIDDLE_FRAC = 2.0 / 3.0
 CCNET_APPROX_ACCURACY = 10000  # percentile_approx: rank err <= 1/accuracy
 
 
+def ccnet_cutoffs(scored: DataFrame, group_col: str = "lang") -> DataFrame:
+    """Per-language head/middle score cutoffs (``c_head``, ``c_mid``) of
+    the approx CCNet split: the ascending 2/3- and 1/3-quantiles of
+    ``avg_log2p`` by ``percentile_approx`` (a mergeable sketch, state
+    bounded by the accuracy, never the row count)."""
+    return scored.groupBy(group_col).agg(
+        F.percentile_approx(
+            "avg_log2p",
+            F.lit(1.0 - CCNET_HEAD_FRAC),
+            F.lit(CCNET_APPROX_ACCURACY),
+        ).alias("c_head"),
+        F.percentile_approx(
+            "avg_log2p",
+            F.lit(1.0 - CCNET_MIDDLE_FRAC),
+            F.lit(CCNET_APPROX_ACCURACY),
+        ).alias("c_mid"),
+    )
+
+
+def ccnet_bucket_col() -> Column:
+    """The head/middle/tail rule over a row carrying ``avg_log2p`` and its
+    language's ``c_head`` / ``c_mid`` cutoffs. A row missing either the
+    score or the cutoffs is ``unscored``: it has nothing to rank by, and
+    it must land in a bucket rather than vanish."""
+    return (
+        F.when(
+            F.col("avg_log2p").isNull() | F.col("c_head").isNull(),
+            F.lit("unscored"),
+        )
+        .when(F.col("avg_log2p") >= F.col("c_head"), F.lit("head"))
+        .when(F.col("avg_log2p") >= F.col("c_mid"), F.lit("middle"))
+        .otherwise(F.lit("tail"))
+    )
+
+
 def ccnet_buckets(docs: DataFrame, thresholds: str = "exact") -> DataFrame:
     """CCNet's language-model quality split (Wenzek et al. 2020, "CCNet:
     Extracting High Quality Monolingual Datasets from Web Crawl Data"):
@@ -1153,23 +1188,8 @@ def ccnet_buckets(docs: DataFrame, thresholds: str = "exact") -> DataFrame:
         # the persist-selectivity rule says cache
         j = scored.join(langs, "doc_id").persist()
         register_parallel_cache(j)
-        cuts = j.groupBy("lang").agg(
-            F.percentile_approx(
-                "avg_log2p",
-                F.lit(1.0 - CCNET_HEAD_FRAC),
-                F.lit(CCNET_APPROX_ACCURACY),
-            ).alias("c_head"),
-            F.percentile_approx(
-                "avg_log2p",
-                F.lit(1.0 - CCNET_MIDDLE_FRAC),
-                F.lit(CCNET_APPROX_ACCURACY),
-            ).alias("c_mid"),
-        )
-        bucketed = j.join(F.broadcast(cuts), "lang").withColumn(
-            "bucket",
-            F.when(F.col("avg_log2p") >= F.col("c_head"), F.lit("head"))
-            .when(F.col("avg_log2p") >= F.col("c_mid"), F.lit("middle"))
-            .otherwise(F.lit("tail")),
+        bucketed = j.join(F.broadcast(ccnet_cutoffs(j)), "lang").withColumn(
+            "bucket", ccnet_bucket_col()
         )
     else:
         w = Window.partitionBy("lang").orderBy(

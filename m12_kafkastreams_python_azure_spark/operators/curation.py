@@ -1266,6 +1266,48 @@ TEMP_ALPHA = 0.3       # XLM-R / mT5 exponent: upsample the tail
 TEMP_BUDGET_FRAC = 0.5  # target corpus size as a fraction of the input
 
 
+def md5_uniform(id_col: str) -> Column:
+    """Each doc's keep-decision uniform in (0, 1): the first 52 bits of
+    md5(id) plus a half, over 2^52 (``_md5_u_sql`` is the DuckDB
+    spelling). A pure function of the id, so a keep decision never
+    depends on which other docs are present."""
+    return (
+        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 13), 16, 10)
+        .cast("double")
+        + F.lit(0.5)
+    ) / F.lit(float(1 << 52))
+
+
+def temperature_rates(
+    docs: DataFrame,
+    alpha: float = TEMP_ALPHA,
+    budget_frac: float = TEMP_BUDGET_FRAC,
+    group_col: str = "lang",
+) -> DataFrame:
+    """The |langs|-row (group, n_docs, keep_prob) table of
+    ``temperature_sample``: keep_prob = min(1, S * p_l / n_l) with
+    p_l = n_l^alpha / sum_m n_m^alpha and S = budget_frac * N."""
+    rates_w = Window.partitionBy()
+    return (
+        docs.groupBy(group_col)
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+        .withColumn("n_total", F.sum("n_docs").over(rates_w))
+        .withColumn("p_num", F.pow(F.col("n_docs").cast("double"), F.lit(float(alpha))))
+        .withColumn("p_den", F.sum("p_num").over(rates_w))
+        .withColumn(
+            "keep_prob",
+            F.least(
+                F.lit(1.0),
+                F.lit(float(budget_frac))
+                * F.col("n_total").cast("double")
+                * (F.col("p_num") / F.col("p_den"))
+                / F.col("n_docs").cast("double"),
+            ),
+        )
+        .select(group_col, "n_docs", "keep_prob")
+    )
+
+
 def temperature_sample(
     docs: DataFrame,
     alpha: float = TEMP_ALPHA,
@@ -1292,33 +1334,10 @@ def temperature_sample(
     dsir discipline) and broadcast back; the keep decision is one
     narrow filter. Nothing anywhere is proportional to corpus size but
     the single scan."""
-    rates_w = Window.partitionBy()
-    rates = (
-        docs.groupBy(group_col)
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .withColumn("n_total", F.sum("n_docs").over(rates_w))
-        .withColumn("p_num", F.pow(F.col("n_docs").cast("double"), F.lit(float(alpha))))
-        .withColumn("p_den", F.sum("p_num").over(rates_w))
-        .withColumn(
-            "keep_prob",
-            F.least(
-                F.lit(1.0),
-                F.lit(float(budget_frac))
-                * F.col("n_total").cast("double")
-                * (F.col("p_num") / F.col("p_den"))
-                / F.col("n_docs").cast("double"),
-            ),
-        )
-        .select(group_col, "n_docs", "keep_prob")
-    )
-    u = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 13), 16, 10)
-        .cast("double")
-        + F.lit(0.5)
-    ) / F.lit(float(1 << 52))
+    rates = temperature_rates(docs, alpha, budget_frac, group_col)
     kept = (
         docs.join(F.broadcast(rates), group_col)
-        .withColumn("_keep", u < F.col("keep_prob"))
+        .withColumn("_keep", md5_uniform(id_col) < F.col("keep_prob"))
     )
     return kept.groupBy(group_col).agg(
         F.max("n_docs").alias("n_docs"),
@@ -1464,6 +1483,39 @@ def q_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doremi_weights(parallel_scan(load_table(spark, sf_dir, "documents")))
 
 
+def doremi_rates(
+    docs: DataFrame,
+    budget_frac: float = DOREMI_BUDGET_FRAC,
+    eta: float = DOREMI_ETA,
+    smooth: float = DOREMI_SMOOTH,
+    group_col: str = "source",
+) -> DataFrame:
+    """The |domains|-row (group, n_docs, keep_prob) table of
+    ``doremi_resample``: keep_prob = min(1, S * w_i / n_i) with w_i the
+    published ``doremi_weights`` weight and S = budget_frac * N."""
+    weights = doremi_weights(docs, eta=eta, smooth=smooth, group_col=group_col)
+    w = Window.partitionBy()
+    counts = (
+        docs.groupBy(group_col)
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+        .withColumn("n_total", F.sum("n_docs").over(w))
+    )
+    return (
+        counts.join(weights.select(group_col, "weight"), group_col)
+        .withColumn(
+            "keep_prob",
+            F.least(
+                F.lit(1.0),
+                F.lit(float(budget_frac))
+                * F.col("n_total").cast("double")
+                * F.col("weight")
+                / F.col("n_docs").cast("double"),
+            ),
+        )
+        .select(group_col, "n_docs", "keep_prob")
+    )
+
+
 def doremi_resample(
     docs: DataFrame,
     budget_frac: float = DOREMI_BUDGET_FRAC,
@@ -1494,34 +1546,9 @@ def doremi_resample(
     Scale shape: one |domains|-row rates table broadcast back; the keep
     decision is one narrow filter. Nothing is proportional to corpus
     size but the scorer's single scan."""
-    weights = doremi_weights(docs, eta=eta, smooth=smooth, group_col=group_col)
-    w = Window.partitionBy()
-    counts = (
-        docs.groupBy(group_col)
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .withColumn("n_total", F.sum("n_docs").over(w))
-    )
-    rates = (
-        counts.join(weights.select(group_col, "weight"), group_col)
-        .withColumn(
-            "keep_prob",
-            F.least(
-                F.lit(1.0),
-                F.lit(float(budget_frac))
-                * F.col("n_total").cast("double")
-                * F.col("weight")
-                / F.col("n_docs").cast("double"),
-            ),
-        )
-        .select(group_col, "n_docs", "keep_prob")
-    )
-    u = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 13), 16, 10)
-        .cast("double")
-        + F.lit(0.5)
-    ) / F.lit(float(1 << 52))
+    rates = doremi_rates(docs, budget_frac, eta, smooth, group_col)
     kept = docs.join(F.broadcast(rates), group_col).withColumn(
-        "_keep", u < F.col("keep_prob")
+        "_keep", md5_uniform(id_col) < F.col("keep_prob")
     )
     return kept.groupBy(group_col).agg(
         F.max("n_docs").alias("n_docs"),

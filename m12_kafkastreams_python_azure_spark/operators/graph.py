@@ -22,7 +22,7 @@ closure + min), so the whole iterative computation is value-checked.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
@@ -333,23 +333,65 @@ def dedup_keep_best(
             shingles(F.col(text_col)).alias("sh"),
         ).persist()
         register_parallel_cache(sh)
-        a = sh.select(F.col("id").alias("id_a"), "pfx", F.col("sh").alias("sh_a"))
-        b = sh.select(F.col("id").alias("id_b"), "pfx", F.col("sh").alias("sh_b"))
-        pairs = (
-            a.join(b, "pfx")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(jaccard(F.col("sh_a"), F.col("sh_b")) >= jaccard_threshold)
-            .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        pairs = prefix_bucket_pairs(sh, jaccard_threshold).select(
+            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
         )
     else:
         raise ValueError(f"unknown dedup_keep_best method: {method!r} (prefix|minhash)")
-    from pyspark.sql import Window
-
-    comps = connected_components(pairs)
     scored = docs.select(
         F.col(id_col).alias("id"),
         quality_score_cols(F.col(text_col))["quality_score"].alias("q"),
     )
+    return keep_best_per_cluster(pairs, scored)
+
+
+def _bucket_join(sigs_a: DataFrame, sigs_b: DataFrame) -> DataFrame:
+    """(id, pfx, sh) signature rows of two tables that share a blocking
+    prefix, as (pfx, id_a, sh_a, id_b, sh_b)."""
+    a = sigs_a.select(F.col("id").alias("id_a"), "pfx", F.col("sh").alias("sh_a"))
+    b = sigs_b.select(F.col("id").alias("id_b"), "pfx", F.col("sh").alias("sh_b"))
+    return a.join(b, "pfx")
+
+
+def _jaccard_at_least(threshold: float) -> Column:
+    return jaccard(F.col("sh_a"), F.col("sh_b")) >= threshold
+
+
+def prefix_bucket_pairs(sigs: DataFrame, jaccard_threshold: float) -> DataFrame:
+    """The near-dup pairs (id_a < id_b) within one (id, pfx, sh)
+    signature table: same blocking prefix, exact shingle Jaccard at
+    least ``jaccard_threshold``."""
+    return (
+        _bucket_join(sigs, sigs)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(_jaccard_at_least(jaccard_threshold))
+        .select("id_a", "id_b")
+    )
+
+
+def prefix_bucket_cross_pairs(
+    new: DataFrame, old: DataFrame, jaccard_threshold: float
+) -> DataFrame:
+    """The ``prefix_bucket_pairs`` rule for the pairs with one endpoint in
+    each table, each ordered as (smaller id, larger id)."""
+    return (
+        _bucket_join(new, old)
+        .filter(_jaccard_at_least(jaccard_threshold))
+        .select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+        )
+    )
+
+
+def keep_best_per_cluster(pairs: DataFrame, scored: DataFrame) -> DataFrame:
+    """The keep-best tail: connected components over the (src, dst)
+    near-dup edges, then per cluster the highest-quality doc of the
+    (id, q) table (tie -> min id); a doc in no edge is its own cluster.
+    Output (doc_id, cluster, cluster_size, quality_score)."""
+    from pyspark.sql import Window
+
+    comps = connected_components(pairs)
     labeled = scored.join(comps, "id", "left").select(
         "id", F.coalesce("comp", F.col("id")).alias("cluster"), "q"
     )

@@ -1,6 +1,6 @@
 """Advanced Structured Streaming operators: stream-stream interval join,
-custom stateful processing (applyInPandasWithState), incremental dedup via
-foreachBatch, and the rate-source load generator (reference P1,
+custom stateful processing (applyInPandasWithState), the foreachBatch
+curation processors, and the rate-source load generator (reference P1,
 producer-app-data.yaml:29-38).
 
 Scale notes:
@@ -11,21 +11,28 @@ Scale notes:
   the slow path, reserved for semantics built-ins can't express (here: a
   running per-user aggregate with custom eviction we control). State lives
   in the Spark state store, partitioned by key: scales horizontally.
-- The foreachBatch dedup is the streaming twin of the batch exact-dedup
-  operator: per micro-batch, anti-join against the already-seen key set.
+- The foreachBatch processors (exact dedup, keep-best, and the fit-once
+  curation set: decontaminate, DSIR, CCNet, temperature, DoReMi,
+  containment, soft-dedup) share one skeleton: fit artifacts once,
+  transform each micro-batch, overwrite ``batch=<id>``, read back, and
+  ``start``. Each is the streaming twin of a batch operator and calls the
+  same math.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.window import Window
 
+from ..functions.text import quality_score_cols
+from ..operators import corpus, curation, dedup, dsir, graph
 from ..sources.fs import dir_has_data
 
 
@@ -136,90 +143,6 @@ def user_stats_stateful(events: DataFrame) -> DataFrame:
     )
 
 
-def dedup_batch_processor(
-    out_dir: str, key_col: str = "text", id_col: str = "doc_id"
-):
-    """The foreachBatch function used by ``start_dedup_stream``, exposed so
-    tests can drive it directly with a repeated batch_id (simulating the
-    at-least-once replay that a live failure would produce)."""
-    hash_col = F.sha2(F.col(key_col).cast("string"), 256).alias("__h")
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        fresh = (
-            batch.withColumn("__h", hash_col)
-            # batch-local winner per hash: lowest id (deterministic)
-            .withColumn(
-                "__rn",
-                F.row_number().over(Window.partitionBy("__h").orderBy(id_col)),
-            )
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        # Only a genuinely-absent output dir means "nothing seen yet".
-        # Swallowing every read failure would skip the anti-join and emit
-        # duplicates, silently breaking the one-row-per-hash contract.
-        if dir_has_data(spark, out_dir):
-            from pyspark.errors import AnalysisException
-
-            try:
-                # exclude THIS batch's own (possibly half-written) replay
-                # dir from the seen set, then overwrite it wholesale
-                seen = (
-                    spark.read.option("basePath", out_dir)
-                    .parquet(out_dir)
-                    .filter(F.col("batch") != batch_id)
-                    .select("__h")
-                    .distinct()
-                )
-                fresh = fresh.join(seen, "__h", "left_anti")
-            except AnalysisException as exc:
-                # A crash during the FIRST batch's write can leave only
-                # uncommitted debris (batch=N/_temporary): the dir exists
-                # but holds zero committed parquet files, and the read
-                # fails schema inference. That precise state means
-                # "nothing durably seen yet" — proceed without the
-                # anti-join (the overwrite below replaces the debris).
-                # Every other analysis error still propagates.
-                if "UNABLE_TO_INFER_SCHEMA" not in str(exc):
-                    raise
-        fresh.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-
-    return _process
-
-
-def start_dedup_stream(
-    docs: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    key_col: str = "text",
-    id_col: str = "doc_id",
-) -> StreamingQuery:
-    """Incremental exact dedup: per micro-batch, keep one row per content
-    hash that has never been emitted before (anti-join against the output so
-    far), append survivors. ``foreachBatch`` gives the batch DataFrame API
-    (including the anti-join) inside a streaming query.
-
-    Output layout: one ``batch=<id>`` partition dir per micro-batch (readers
-    see an extra ``batch`` partition column — lineage metadata that also
-    enables the exactly-once replay described below).
-
-    Replay semantics: foreachBatch is at-least-once — after a failure the
-    same batch_id can be re-delivered. Each batch writes (overwrite mode)
-    its own ``batch=<id>`` partition directory, so a replay rewrites the
-    same directory instead of appending a duplicate copy — exactly-once
-    output at directory granularity on top of the row-level seen-hash
-    anti-join.
-    """
-    return (
-        docs.writeStream.foreachBatch(
-            dedup_batch_processor(out_dir, key_col, id_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
 def rate_source(
     spark: SparkSession, rows_per_second: int = 1, num_partitions: int = 3
 ) -> DataFrame:
@@ -261,6 +184,152 @@ def dedup_stream_within_watermark(
     )
 
 
+# --------------------------------------------------- foreachBatch skeleton
+#
+# Every foreachBatch processor below is the same machine. Construction
+# fits the processor's artifacts once under ``state_dir`` and skips the fit
+# when they are already there, so a restarted query reuses them. Each
+# micro-batch is transformed and overwrites ``{out}/batch=<id>``.
+# foreachBatch is at-least-once: after a crash Spark re-delivers the batch
+# it had not committed, and the replay rewrites that batch's own directory
+# instead of appending a second copy. Output is therefore exactly-once at
+# directory granularity (the idempotent-sink recovery of Structured
+# Streaming). tests/test_streaming_restart.py crashes and restarts every
+# processor to pin this.
+
+
+def _fit_once(
+    spark: SparkSession,
+    state_dir: str,
+    artifacts: tuple[str, ...],
+    fit: Callable[[], Iterable[DataFrame]],
+) -> None:
+    """Write the DataFrames ``fit()`` returns, in order, to
+    ``{state_dir}/<name>`` for the names in ``artifacts`` — unless every
+    one of them already holds data. Each artifact is written before the
+    next one is taken, so a generator ``fit`` may read an earlier
+    artifact back."""
+    if all(dir_has_data(spark, f"{state_dir}/{a}") for a in artifacts):
+        return
+    for name, df in zip(artifacts, fit(), strict=True):
+        df.write.mode("overwrite").parquet(f"{state_dir}/{name}")
+
+
+def _write_batch(df: DataFrame, out: str, batch_id: int) -> None:
+    df.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
+
+
+def _per_batch(
+    state_dir: str,
+    artifacts: tuple[str, ...],
+    out: str,
+    transform: Callable[..., DataFrame],
+) -> Callable[[DataFrame, int], None]:
+    """The foreachBatch function of a fit-once processor:
+    ``transform(batch, *artifacts)`` overwrites
+    ``{state_dir}/{out}/batch=<id>``."""
+
+    def _process(batch: DataFrame, batch_id: int) -> None:
+        read = batch.sparkSession.read
+        models = [read.parquet(f"{state_dir}/{a}") for a in artifacts]
+        _write_batch(transform(batch, *models), f"{state_dir}/{out}", batch_id)
+
+    return _process
+
+
+def read_batches(spark: SparkSession, out: str) -> DataFrame:
+    """Everything the batches wrote under ``out`` so far: the union of
+    the ``batch=<id>`` directories, ``batch`` column retained for
+    audit."""
+    return spark.read.option("basePath", out).parquet(out)
+
+
+def _read_prior(spark: SparkSession, out: str, batch_id: int) -> DataFrame | None:
+    """What the EARLIER batches wrote under ``out``: this batch's own,
+    possibly half-written, replay directory is excluded (the replay
+    overwrites it). None means nothing is durable yet.
+
+    Only a genuinely empty state means that. Swallowing every read
+    failure would skip the caller's anti-join and emit duplicates. The
+    one other state that means it: a crash during the FIRST batch's
+    write can leave only uncommitted debris (``batch=N/_temporary``);
+    the dir exists but holds zero committed parquet files and the read
+    fails schema inference. Every other analysis error propagates."""
+    if not dir_has_data(spark, out):
+        return None
+    try:
+        prior = read_batches(spark, out)
+    except AnalysisException as exc:
+        if "UNABLE_TO_INFER_SCHEMA" not in str(exc):
+            raise
+        return None
+    return prior.filter(F.col("batch") != batch_id).drop("batch")
+
+
+def start(
+    docs: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Run a ``(batch, batch_id)`` processor over every micro-batch of
+    the streaming ``docs``. The checkpoint is what lets a restarted
+    query re-deliver the batch it crashed in, under the same id."""
+    return (
+        docs.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+    )
+
+
+def _id_text(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    return df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+
+
+# ------------------------------------------------ incremental exact dedup
+
+
+def dedup_batch_processor(
+    out_dir: str, key_col: str = "text", id_col: str = "doc_id"
+):
+    """The foreachBatch function of ``start_dedup_stream``: per batch,
+    the lowest-id row per content hash, anti-joined against every hash
+    earlier batches emitted."""
+    hash_col = F.sha2(F.col(key_col).cast("string"), 256).alias("__h")
+
+    def _process(batch: DataFrame, batch_id: int) -> None:
+        fresh = (
+            batch.withColumn("__h", hash_col)
+            # batch-local winner per hash: lowest id (deterministic)
+            .withColumn(
+                "__rn",
+                F.row_number().over(Window.partitionBy("__h").orderBy(id_col)),
+            )
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+        seen = _read_prior(batch.sparkSession, out_dir, batch_id)
+        if seen is not None:
+            fresh = fresh.join(seen.select("__h").distinct(), "__h", "left_anti")
+        _write_batch(fresh, out_dir, batch_id)
+
+    return _process
+
+
+def start_dedup_stream(
+    docs: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
+    key_col: str = "text",
+    id_col: str = "doc_id",
+) -> StreamingQuery:
+    """Incremental exact dedup: per micro-batch, keep one row per content
+    hash that has never been emitted before (anti-join against the output so
+    far), append survivors as ``batch=<id>`` partition dirs (readers see
+    an extra ``batch`` column)."""
+    process = dedup_batch_processor(out_dir, key_col, id_col)
+    return start(docs, process, checkpoint_dir)
+
+
 # ------------------------------------------------- incremental keep-best dedup
 
 
@@ -273,8 +342,7 @@ def keep_best_batch_processor(
 ):
     """foreachBatch function for ``start_keep_best_stream`` — the streaming
     spine of ``graph.dedup_keep_best`` (cluster transitive near-dups, keep
-    the best-quality doc per cluster), exposed so tests can drive it
-    directly with repeated batch_ids (at-least-once replay).
+    the best-quality doc per cluster).
 
     Incremental contract (and why stream == batch EXACTLY): the state dirs
     persist (a) each doc's blocking signature + quality — ``sigs/`` — and
@@ -282,118 +350,45 @@ def keep_best_batch_processor(
     discovers only the pairs with >= 1 NEW endpoint (new x new, plus
     new x state via the prefix-bucket equi-join: each pair in the stream's
     lifetime is computed exactly once — the incremental saving), appends
-    them, and re-derives the keep list from CC + quality-argmax over the
-    CUMULATIVE edges and sigs — the identical tail ``dedup_keep_best``
-    runs, over an identical pair set, so the emitted ``keep/`` snapshot
-    equals the batch operator on all docs seen so far, retroactive keeper
-    changes included (a late arrival can dethrone an earlier keeper —
-    which is why the output is a per-batch SNAPSHOT, complete-mode
-    semantics, not an append log).
+    them, and re-derives the keep list with ``graph.keep_best_per_cluster``
+    over the CUMULATIVE edges and sigs — the identical tail
+    ``dedup_keep_best`` runs, over an identical pair set, so the emitted
+    ``keep/`` snapshot equals the batch operator on all docs seen so far,
+    retroactive keeper changes included (a late arrival can dethrone an
+    earlier keeper — which is why the output is a per-batch SNAPSHOT,
+    complete-mode semantics, not an append log).
 
     Scale shape: per batch, the pair discovery joins |batch| rows against
     the bucket-keyed signature state (an equi-join, never all-pairs); the
     CC + argmax tail runs over the edge set (near-dups only — orders of
     magnitude smaller than the corpus) plus the 3-column scored-node
-    table. Replay safety: every state write is a per-batch partition dir
-    in overwrite mode, and state reads exclude the current batch_id — a
-    re-delivered batch rewrites its own dirs instead of double-counting.
-    """
-    from m12_kafkastreams_python_azure_spark.functions.text import (
-        quality_score_cols,
-    )
-    from m12_kafkastreams_python_azure_spark.operators.dedup import (
-        jaccard,
-        shingles,
-    )
-    from m12_kafkastreams_python_azure_spark.operators.graph import (
-        connected_components,
-    )
-
+    table."""
     sigs_dir = f"{state_dir}/sigs"
     pairs_dir = f"{state_dir}/pairs"
-    keep_dir = f"{state_dir}/keep"
-
-    def _read_state(spark, path: str, batch_id: int) -> DataFrame | None:
-        if not dir_has_data(spark, path):
-            return None
-        from pyspark.errors import AnalysisException
-
-        try:
-            return (
-                spark.read.option("basePath", path)
-                .parquet(path)
-                .filter(F.col("batch") != batch_id)
-                .drop("batch")
-            )
-        except AnalysisException as exc:
-            # first-batch crash debris: dir exists, zero committed files
-            # (see dedup_batch_processor for the full rationale)
-            if "UNABLE_TO_INFER_SCHEMA" not in str(exc):
-                raise
-            return None
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         new_sigs = batch.select(
             F.col(id_col).alias("id"),
             F.substring(F.col(text_col), 1, prefix_len).alias("pfx"),
-            shingles(F.col(text_col)).alias("sh"),
+            dedup.shingles(F.col(text_col)).alias("sh"),
             quality_score_cols(F.col(text_col))["quality_score"].alias("q"),
         ).persist()
-        old_sigs = _read_state(spark, sigs_dir, batch_id)
-        a = new_sigs.select(F.col("id").alias("id_a"), "pfx", F.col("sh").alias("sh_a"))
-        b = new_sigs.select(F.col("id").alias("id_b"), "pfx", F.col("sh").alias("sh_b"))
-        new_pairs = (
-            a.join(b, "pfx")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(jaccard(F.col("sh_a"), F.col("sh_b")) >= jaccard_threshold)
-            .select("id_a", "id_b")
-        )
+        new_pairs = graph.prefix_bucket_pairs(new_sigs, jaccard_threshold)
+        old_sigs = _read_prior(spark, sigs_dir, batch_id)
         if old_sigs is not None:
-            o = old_sigs.select(
-                F.col("id").alias("id_o"), "pfx", F.col("sh").alias("sh_o")
+            new_pairs = new_pairs.unionByName(
+                graph.prefix_bucket_cross_pairs(new_sigs, old_sigs, jaccard_threshold)
             )
-            n = new_sigs.select(
-                F.col("id").alias("id_n"), "pfx", F.col("sh").alias("sh_n")
-            )
-            cross = (
-                n.join(o, "pfx")
-                .filter(jaccard(F.col("sh_n"), F.col("sh_o")) >= jaccard_threshold)
-                .select(
-                    F.least("id_n", "id_o").alias("id_a"),
-                    F.greatest("id_n", "id_o").alias("id_b"),
-                )
-            )
-            new_pairs = new_pairs.unionByName(cross)
-        new_pairs.write.mode("overwrite").parquet(f"{pairs_dir}/batch={batch_id}")
-        new_sigs.select("id", "pfx", "sh", "q").write.mode("overwrite").parquet(
-            f"{sigs_dir}/batch={batch_id}"
+        _write_batch(new_pairs, pairs_dir, batch_id)
+        _write_batch(new_sigs, sigs_dir, batch_id)
+        keep = graph.keep_best_per_cluster(
+            read_batches(spark, pairs_dir).select(
+                F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+            ),
+            read_batches(spark, sigs_dir).select("id", "q"),
         )
-        # cumulative tail — identical to graph.dedup_keep_best's
-        all_sigs = spark.read.option("basePath", sigs_dir).parquet(sigs_dir)
-        all_pairs = spark.read.option("basePath", pairs_dir).parquet(pairs_dir)
-        comps = connected_components(
-            all_pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        )
-        labeled = (
-            all_sigs.select("id", "q")
-            .join(comps, "id", "left")
-            .select("id", F.coalesce("comp", F.col("id")).alias("cluster"), "q")
-        )
-        size_w = Window.partitionBy("cluster")
-        rank_w = Window.partitionBy("cluster").orderBy(F.desc("q"), F.asc("id"))
-        keep = (
-            labeled.withColumn("cluster_size", F.count(F.lit(1)).over(size_w))
-            .withColumn("_rn", F.row_number().over(rank_w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                F.col("id").alias("doc_id"),
-                "cluster",
-                F.col("cluster_size").cast("long").alias("cluster_size"),
-                F.round("q", 6).alias("quality_score"),
-            )
-        )
-        keep.write.mode("overwrite").parquet(keep_dir)
+        keep.write.mode("overwrite").parquet(f"{state_dir}/keep")
         new_sigs.unpersist()
 
     return _process
@@ -412,15 +407,10 @@ def start_keep_best_stream(
     ``{state_dir}/keep`` holds exactly what ``graph.dedup_keep_best``
     would output on all documents seen so far (equivalence pinned in
     tests/test_round9_ops.py on a replayed corpus)."""
-    return (
-        docs.writeStream.foreachBatch(
-            keep_best_batch_processor(
-                state_dir, text_col, id_col, jaccard_threshold, prefix_len
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    process = keep_best_batch_processor(
+        state_dir, text_col, id_col, jaccard_threshold, prefix_len
     )
+    return start(docs, process, checkpoint_dir)
 
 
 # ---------------------------------------------- streaming decontamination
@@ -443,55 +433,39 @@ def decontaminate_batch_processor(
     function of (the doc's grams, the eval gram set) alone — there is no
     cross-document state — so screening shard-by-shard against the same
     persisted eval grams produces precisely the rows the batch operator
-    produces over the union of shards. The discipline being exercised is
-    the state lifecycle, not the math:
+    produces over the union of shards.
 
-    - the eval gram set is written once to ``{state_dir}/eval_grams``
-      (parquet, the exact-confirm side) and the bloom words are
-      collected once into the closure (the ~25x-smaller probe side) —
-      a 10^8-gram eval set costs each micro-batch a closure-shipped bit
-      array plus a confirm join that only moves the bloom-surviving
-      sliver, never a per-batch rebuild or a string broadcast;
-    - per-batch output is a partition dir ``{state_dir}/contam/
-      batch=<id>`` written in overwrite mode — an at-least-once replay
-      of a batch rewrites its own partition instead of double-counting
-      (the ``keep_best_batch_processor`` replay discipline).
-    """
-    from m12_kafkastreams_python_azure_spark.operators.corpus import (
-        DECONTAM_N,
-        bloom_might_contain,
-        build_gram_bloom,
-        word_ngrams,
+    The eval gram set is written once to ``{state_dir}/eval_grams``
+    (parquet, the exact-confirm side) and the bloom words are collected
+    once into the closure (the ~25x-smaller probe side) — a 10^8-gram
+    eval set costs each micro-batch a closure-shipped bit array plus a
+    confirm join that only moves the bloom-surviving sliver, never a
+    per-batch rebuild or a string broadcast. Output:
+    ``{state_dir}/contam/batch=<id>``."""
+    ngram_n = corpus.DECONTAM_N if n is None else n
+    spark = eval_docs.sparkSession
+    arts = ("eval_grams",)
+    eval_grams = eval_docs.select(
+        F.explode(corpus.word_ngrams(F.col(text_col), ngram_n)).alias("gram")
+    ).distinct()
+    _fit_once(spark, state_dir, arts, lambda: [eval_grams])
+    bloom, m_bits = corpus.build_gram_bloom(
+        spark.read.parquet(f"{state_dir}/eval_grams")
     )
 
-    ngram_n = DECONTAM_N if n is None else n
-    spark = eval_docs.sparkSession
-    eval_dir = f"{state_dir}/eval_grams"
-    contam_dir = f"{state_dir}/contam"
-    if not dir_has_data(spark, eval_dir):
-        (
-            eval_docs.select(
-                F.explode(word_ngrams(F.col(text_col), ngram_n)).alias("gram")
-            )
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(eval_dir)
-        )
-    bloom, m_bits = build_gram_bloom(spark.read.parquet(eval_dir))
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        bspark = batch.sparkSession
+    def _transform(batch: DataFrame, ev: DataFrame) -> DataFrame:
         grams = batch.select(
             F.col(id_col).alias("doc_id"),
-            F.explode(word_ngrams(F.col(text_col), ngram_n)).alias("gram"),
+            F.explode(corpus.word_ngrams(F.col(text_col), ngram_n)).alias("gram"),
         )
         totals = grams.groupBy("doc_id").agg(
             F.count(F.lit(1)).alias("n_grams")
         )
-        cand = grams.filter(bloom_might_contain(bloom, m_bits, F.col("gram")))
-        ev = bspark.read.parquet(eval_dir).withColumn("hit", F.lit(True))
-        confirmed = cand.join(ev, "gram")
-        out = (
+        cand = grams.filter(
+            corpus.bloom_might_contain(bloom, m_bits, F.col("gram"))
+        )
+        confirmed = cand.join(ev.withColumn("hit", F.lit(True)), "gram")
+        return (
             confirmed.groupBy("doc_id")
             .agg(F.count_distinct("gram").alias("n_collisions"))
             .join(totals, "doc_id")
@@ -506,17 +480,13 @@ def decontaminate_batch_processor(
                 ).alias("contam_ratio"),
             )
         )
-        out.write.mode("overwrite").parquet(f"{contam_dir}/batch={batch_id}")
 
-    return _process
+    return _per_batch(state_dir, arts, "contam", _transform)
 
 
 def read_contaminated(spark: SparkSession, state_dir: str) -> DataFrame:
-    """All contaminated docs seen by the stream so far (union of batch
-    partitions; ``batch`` column retained for audit)."""
-    return spark.read.option("basePath", f"{state_dir}/contam").parquet(
-        f"{state_dir}/contam"
-    )
+    """All contaminated docs seen by the stream so far."""
+    return read_batches(spark, f"{state_dir}/contam")
 
 
 def start_decontaminate_stream(
@@ -532,15 +502,10 @@ def start_decontaminate_stream(
     ``read_contaminated`` over ``state_dir`` equals
     ``corpus.decontaminate_bloom``'s output on all train shards seen so
     far (pinned in tests/test_streaming_decontam.py, replay included)."""
-    return (
-        docs.writeStream.foreachBatch(
-            decontaminate_batch_processor(
-                eval_docs, state_dir, n, text_col, id_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    process = decontaminate_batch_processor(
+        eval_docs, state_dir, n, text_col, id_col
     )
+    return start(docs, process, checkpoint_dir)
 
 
 # ----------------------------------------------- streaming DSIR scoring
@@ -556,10 +521,10 @@ def dsir_batch_processor(
     """foreachBatch function for ``start_dsir_stream`` — the incremental
     twin of ``dsir.dsir_weights``, in the deployment shape the paper
     assumes: the target and raw hashed-n-gram models are FIT ONCE (on
-    the target set and a raw sample) at processor construction,
-    persisted to ``{state_dir}/models/``, and every arriving corpus
-    shard is scored against them — a narrow pass + two <=256-row
-    broadcast joins per batch, never a per-batch model rebuild.
+    the target set and a raw sample) into ``{state_dir}/models/``, and
+    every arriving corpus shard is scored against them — a narrow pass +
+    two <=256-row broadcast joins per batch, never a per-batch model
+    rebuild.
 
     Why stream == batch EXACTLY (pinned in tests): per-document weight
     is a function of (the doc's grams, the two fixed models) alone, so
@@ -569,46 +534,32 @@ def dsir_batch_processor(
     downstream ``read_dsir_selection`` over the CUMULATIVE weights is
     the same Gumbel-top-n sample ``dsir_resample`` draws — the stream
     never has to re-shuffle history to keep the sample correct, because
-    top-n over (append-only keys) is monotone.
-
-    Replay safety: per-batch overwrite partitions, the
-    ``decontaminate_batch_processor`` discipline."""
-    from m12_kafkastreams_python_azure_spark.operators.dsir import (
-        dsir_model_tables,
-        dsir_score_with_models,
-        gumbel_key_col,
+    top-n over (append-only keys) is monotone."""
+    arts = ("models/target", "models/raw")
+    _fit_once(
+        target_docs.sparkSession,
+        state_dir,
+        arts,
+        lambda: [
+            m.coalesce(1)
+            for m in dsir.dsir_model_tables(target_docs, raw_sample, text_col)
+        ],
     )
 
-    spark = target_docs.sparkSession
-    tdir = f"{state_dir}/models/target"
-    rdir = f"{state_dir}/models/raw"
-    wdir = f"{state_dir}/weights"
-    if not (dir_has_data(spark, tdir) and dir_has_data(spark, rdir)):
-        tmodel, rmodel = dsir_model_tables(
-            target_docs, raw_sample, text_col
+    def _transform(
+        batch: DataFrame, tmodel: DataFrame, rmodel: DataFrame
+    ) -> DataFrame:
+        return dsir.dsir_score_with_models(
+            _id_text(batch, id_col, text_col), tmodel, rmodel
+        ).withColumn(
+            "gumbel_key", F.col("log_weight") + dsir.gumbel_key_col(F.col("doc_id"))
         )
-        tmodel.coalesce(1).write.mode("overwrite").parquet(tdir)
-        rmodel.coalesce(1).write.mode("overwrite").parquet(rdir)
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        bspark = batch.sparkSession
-        tmodel = bspark.read.parquet(tdir)
-        rmodel = bspark.read.parquet(rdir)
-        docs = batch.select(
-            F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-        )
-        out = dsir_score_with_models(docs, tmodel, rmodel).withColumn(
-            "gumbel_key", F.col("log_weight") + gumbel_key_col(F.col("doc_id"))
-        )
-        out.write.mode("overwrite").parquet(f"{wdir}/batch={batch_id}")
-
-    return _process
+    return _per_batch(state_dir, arts, "weights", _transform)
 
 
 def read_dsir_weights(spark: SparkSession, state_dir: str) -> DataFrame:
-    return spark.read.option("basePath", f"{state_dir}/weights").parquet(
-        f"{state_dir}/weights"
-    )
+    return read_batches(spark, f"{state_dir}/weights")
 
 
 def read_dsir_selection(
@@ -635,15 +586,10 @@ def start_dsir_stream(
 ) -> StreamingQuery:
     """Streaming DSIR scoring: fit-once models, score every micro-batch,
     cumulative Gumbel-top-n via ``read_dsir_selection``."""
-    return (
-        docs.writeStream.foreachBatch(
-            dsir_batch_processor(
-                target_docs, raw_sample, state_dir, text_col, id_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    process = dsir_batch_processor(
+        target_docs, raw_sample, state_dir, text_col, id_col
     )
+    return start(docs, process, checkpoint_dir)
 
 
 # ----------------------------------------- streaming CCNet bucketing
@@ -656,85 +602,53 @@ def ccnet_batch_processor(
     id_col: str = "doc_id",
     group_col: str = "lang",
 ):
-    """foreachBatch function for ``start_ccnet_stream`` — the incremental
-    twin of ``corpus.ccnet_buckets(thresholds="approx")`` (the round-13
-    web-scale path), completing the streaming curation set: the bigram
-    LM tables AND the per-language head/middle score cutoffs are fit
-    ONCE (on the fitting corpus — CCNet fits its LM on the crawl
-    snapshot being bucketed) and persisted under ``{state_dir}/model``;
-    every arriving shard is scored against the fixed model (two
-    vocabulary-bounded broadcast joins) and bucketed by the fixed
-    cutoffs (a |langs|-row broadcast + a narrow when-chain) — no window,
-    no per-language buffering, no per-batch refit.
+    """foreachBatch function for CCNet bucketing — the incremental twin
+    of ``corpus.ccnet_buckets(thresholds="approx")`` (the round-13
+    web-scale path): the bigram LM tables AND the per-language
+    head/middle score cutoffs (``corpus.ccnet_cutoffs``) are fit ONCE
+    (on the fitting corpus — CCNet fits its LM on the crawl snapshot
+    being bucketed) into ``{state_dir}/model``; every arriving shard is
+    scored against the fixed model (two vocabulary-bounded broadcast
+    joins) and bucketed by the fixed cutoffs (a |langs|-row broadcast +
+    ``corpus.ccnet_bucket_col``) — no window, no per-language buffering,
+    no per-batch refit.
 
     stream == batch-with-the-same-artifacts EXACTLY (pinned in
     tests/test_streaming_ccnet.py, including shard-invariance and
     replay): a doc's bucket is a pure function of (its grams, the fixed
-    model, the fixed cutoffs). Per-batch output is overwrite-partitioned
-    ``{state_dir}/buckets/batch=<id>`` — the replay discipline shared by
-    the whole curation set."""
-    from m12_kafkastreams_python_azure_spark.operators.corpus import (
-        CCNET_APPROX_ACCURACY,
-        CCNET_HEAD_FRAC,
-        CCNET_MIDDLE_FRAC,
-        bigram_lm_model_tables,
-        bigram_lm_score_with_model,
-    )
-
+    model, the fixed cutoffs). Aggregating ``read_ccnet_buckets``
+    reproduces the batch operator's (lang, bucket) rollup."""
     spark = fit_docs.sparkSession
-    bdir = f"{state_dir}/model/bigram"
-    hdir = f"{state_dir}/model/hist"
-    cdir = f"{state_dir}/model/cutoffs"
-    outdir = f"{state_dir}/buckets"
-    if not (
-        dir_has_data(spark, bdir)
-        and dir_has_data(spark, hdir)
-        and dir_has_data(spark, cdir)
-    ):
-        bigram_counts, hist_counts = bigram_lm_model_tables(fit_docs)
-        bigram_counts.write.mode("overwrite").parquet(bdir)
-        hist_counts.coalesce(1).write.mode("overwrite").parquet(hdir)
-        scored = bigram_lm_score_with_model(
-            fit_docs.select(
-                F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-            ),
-            spark.read.parquet(bdir),
-            spark.read.parquet(hdir),
-        )
-        cuts = (
-            scored.join(
-                fit_docs.select(
-                    F.col(id_col).alias("doc_id"), group_col
-                ),
-                "doc_id",
-            )
-            .groupBy(group_col)
-            .agg(
-                F.percentile_approx(
-                    "avg_log2p",
-                    F.lit(1.0 - CCNET_HEAD_FRAC),
-                    F.lit(CCNET_APPROX_ACCURACY),
-                ).alias("c_head"),
-                F.percentile_approx(
-                    "avg_log2p",
-                    F.lit(1.0 - CCNET_MIDDLE_FRAC),
-                    F.lit(CCNET_APPROX_ACCURACY),
-                ).alias("c_mid"),
-            )
-        )
-        cuts.coalesce(1).write.mode("overwrite").parquet(cdir)
+    arts = ("model/bigram", "model/hist", "model/cutoffs")
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        bspark = batch.sparkSession
-        bigram_counts = bspark.read.parquet(bdir)
-        hist_counts = bspark.read.parquet(hdir)
-        cuts = bspark.read.parquet(cdir)
+    def _fit():
+        bigram_counts, hist_counts = corpus.bigram_lm_model_tables(fit_docs)
+        yield bigram_counts
+        yield hist_counts.coalesce(1)
+        # the cutoffs score the fit corpus under the model as persisted
+        scored = corpus.bigram_lm_score_with_model(
+            _id_text(fit_docs, id_col, text_col),
+            spark.read.parquet(f"{state_dir}/model/bigram"),
+            spark.read.parquet(f"{state_dir}/model/hist"),
+        )
+        langs = fit_docs.select(F.col(id_col).alias("doc_id"), group_col)
+        cuts = corpus.ccnet_cutoffs(scored.join(langs, "doc_id"), group_col)
+        yield cuts.coalesce(1)
+
+    _fit_once(spark, state_dir, arts, _fit)
+
+    def _transform(
+        batch: DataFrame,
+        bigram_counts: DataFrame,
+        hist_counts: DataFrame,
+        cuts: DataFrame,
+    ) -> DataFrame:
         docs = batch.select(
             F.col(id_col).alias("doc_id"),
             F.col(text_col).alias("text"),
             F.col(group_col).alias("lang"),
         )
-        scored = bigram_lm_score_with_model(
+        scored = corpus.bigram_lm_score_with_model(
             docs.select("doc_id", "text"), bigram_counts, hist_counts
         )
         # LEFT joins from the batch side: a doc none of whose bigrams
@@ -745,7 +659,7 @@ def ccnet_batch_processor(
         # so the deployment shape surfaces drift (a growing unscored
         # share means the fit snapshot no longer covers the stream) and
         # every input doc appears in exactly one bucket.
-        out = (
+        return (
             docs.select("doc_id", "lang")
             .join(scored, "doc_id", "left")
             .join(
@@ -753,50 +667,49 @@ def ccnet_batch_processor(
                 "lang",
                 "left",
             )
-            .withColumn(
-                "bucket",
-                F.when(
-                    F.col("avg_log2p").isNull() | F.col("c_head").isNull(),
-                    F.lit("unscored"),
-                )
-                .when(F.col("avg_log2p") >= F.col("c_head"), F.lit("head"))
-                .when(F.col("avg_log2p") >= F.col("c_mid"), F.lit("middle"))
-                .otherwise(F.lit("tail")),
-            )
+            .withColumn("bucket", corpus.ccnet_bucket_col())
             .select("doc_id", "lang", "bucket", "avg_log2p")
         )
-        out.write.mode("overwrite").parquet(f"{outdir}/batch={batch_id}")
 
-    return _process
+    return _per_batch(state_dir, arts, "buckets", _transform)
 
 
 def read_ccnet_buckets(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Per-doc bucket assignments seen by the stream so far (union of
-    batch partitions; ``batch`` column retained for audit)."""
-    return spark.read.option("basePath", f"{state_dir}/buckets").parquet(
-        f"{state_dir}/buckets"
-    )
+    """Per-doc bucket assignments seen by the stream so far."""
+    return read_batches(spark, f"{state_dir}/buckets")
 
 
-def start_ccnet_stream(
-    docs: DataFrame,
-    fit_docs: DataFrame,
+# ---------------------- streaming temperature and DoReMi resampling
+
+
+def _rate_processor(
+    spark: SparkSession,
     state_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Streaming CCNet bucketing: fit-once LM + cutoffs, bucket every
-    micro-batch; aggregating ``read_ccnet_buckets`` reproduces the batch
-    operator's (lang, bucket) rollup over all shards seen."""
-    return (
-        docs.writeStream.foreachBatch(
-            ccnet_batch_processor(fit_docs, state_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    fit_rates: Callable[[], DataFrame],
+    group_col: str,
+    id_col: str,
+):
+    """The one shape temperature and DoReMi share: a (group, keep_prob)
+    rates table fit once into ``{state_dir}/rates``; every batch keeps
+    the docs whose md5 uniform falls under their group's rate — one
+    broadcast join + one narrow filter. Kept (doc_id, group) rows go to
+    ``{state_dir}/kept``. stream == batch EXACTLY because the keep
+    decision is a pure function of (doc_id, the fixed rates)."""
+    _fit_once(
+        spark,
+        state_dir,
+        ("rates",),
+        lambda: [fit_rates().select(group_col, "keep_prob").coalesce(1)],
     )
 
+    def _transform(batch: DataFrame, rates: DataFrame) -> DataFrame:
+        return (
+            batch.join(F.broadcast(rates), group_col)
+            .filter(curation.md5_uniform(id_col) < F.col("keep_prob"))
+            .select(F.col(id_col).alias("doc_id"), group_col)
+        )
 
-# ------------------------------------- streaming temperature sampling
+    return _per_batch(state_dir, ("rates",), "kept", _transform)
 
 
 def temperature_batch_processor(
@@ -809,76 +722,24 @@ def temperature_batch_processor(
 ):
     """foreachBatch function for ``start_temperature_stream`` — the
     incremental twin of ``curation.temperature_sample``: per-language
-    keep RATES are fit once (on a fitting corpus — in production, the
-    crawl's language census) and persisted to ``{state_dir}/rates``;
-    every arriving shard is filtered by each doc's md5-derived uniform
-    against its language's rate — one broadcast join + one narrow
-    filter per batch.
-
-    stream == batch EXACTLY because the keep decision is a pure
-    function of (doc_id, the fixed rates): shards filtered one at a
-    time keep precisely the docs ``temperature_sample`` keeps over the
-    union (pinned in tests, per-batch and cumulative). Kept doc_ids are
-    written per-batch (overwrite partitions — replay idempotent)."""
-    from m12_kafkastreams_python_azure_spark.operators.curation import (
-        TEMP_ALPHA,
-        TEMP_BUDGET_FRAC,
+    keep RATES (``curation.temperature_rates``) are fit once on a
+    fitting corpus — in production, the crawl's language census — and
+    every arriving shard is filtered against them. Shards filtered one
+    at a time keep precisely the docs ``temperature_sample`` keeps over
+    the union (pinned in tests, per-batch and cumulative)."""
+    a = curation.TEMP_ALPHA if alpha is None else alpha
+    bf = curation.TEMP_BUDGET_FRAC if budget_frac is None else budget_frac
+    return _rate_processor(
+        fit_docs.sparkSession,
+        state_dir,
+        lambda: curation.temperature_rates(fit_docs, a, bf, group_col),
+        group_col,
+        id_col,
     )
-    from pyspark.sql.window import Window
-
-    a = TEMP_ALPHA if alpha is None else alpha
-    bf = TEMP_BUDGET_FRAC if budget_frac is None else budget_frac
-    spark = fit_docs.sparkSession
-    rdir = f"{state_dir}/rates"
-    kdir = f"{state_dir}/kept"
-    if not dir_has_data(spark, rdir):
-        w = Window.partitionBy()
-        rates = (
-            fit_docs.groupBy(group_col)
-            .agg(F.count(F.lit(1)).alias("n_docs"))
-            .withColumn("n_total", F.sum("n_docs").over(w))
-            .withColumn(
-                "p_num",
-                F.pow(F.col("n_docs").cast("double"), F.lit(float(a))),
-            )
-            .withColumn("p_den", F.sum("p_num").over(w))
-            .withColumn(
-                "keep_prob",
-                F.least(
-                    F.lit(1.0),
-                    F.lit(float(bf))
-                    * F.col("n_total").cast("double")
-                    * (F.col("p_num") / F.col("p_den"))
-                    / F.col("n_docs").cast("double"),
-                ),
-            )
-            .select(group_col, "keep_prob")
-        )
-        rates.coalesce(1).write.mode("overwrite").parquet(rdir)
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        bspark = batch.sparkSession
-        rates = bspark.read.parquet(rdir)
-        u = (
-            F.conv(
-                F.substring(F.md5(F.col(id_col).cast("string")), 1, 13), 16, 10
-            ).cast("double")
-            + F.lit(0.5)
-        ) / F.lit(float(1 << 52))
-        kept = (
-            batch.join(F.broadcast(rates), group_col)
-            .filter(u < F.col("keep_prob"))
-            .select(F.col(id_col).alias("doc_id"), group_col)
-        )
-        kept.write.mode("overwrite").parquet(f"{kdir}/batch={batch_id}")
-
-    return _process
 
 
 def read_temperature_kept(spark: SparkSession, state_dir: str) -> DataFrame:
-    return spark.read.option("basePath", f"{state_dir}/kept").parquet(
-        f"{state_dir}/kept"
-    )
+    return read_batches(spark, f"{state_dir}/kept")
 
 
 def start_temperature_stream(
@@ -892,18 +753,8 @@ def start_temperature_stream(
     """Streaming temperature sampling: fit-once rates, filter every
     micro-batch; ``read_temperature_kept`` equals the batch operator's
     keep set over all shards seen."""
-    return (
-        docs.writeStream.foreachBatch(
-            temperature_batch_processor(
-                fit_docs, state_dir, alpha, budget_frac
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-# ------------------------------- streaming DoReMi mixture resampling
+    process = temperature_batch_processor(fit_docs, state_dir, alpha, budget_frac)
+    return start(docs, process, checkpoint_dir)
 
 
 def doremi_batch_processor(
@@ -916,82 +767,29 @@ def doremi_batch_processor(
     id_col: str = "doc_id",
 ):
     """foreachBatch function for ``start_doremi_stream`` — the streaming
-    twin of ``curation.doremi_resample``, the EIGHTH member of the
-    streaming curation set (keep-best, decontam, DSIR, temperature,
-    CCNet, containment, soft-dedup, DoReMi): per-domain keep RATES are
-    fit once from the DoReMi weights (the LM-scored mixture update —
-    the expensive scorer pass is the build-once artifact, the fit-once
-    discipline every member shares) and persisted to
-    ``{state_dir}/rates``; every arriving shard is filtered by each
-    doc's md5-derived uniform against its domain's rate — one broadcast
-    join + one narrow filter per batch.
-
-    stream == batch EXACTLY because the keep decision is a pure
-    function of (doc_id, the fixed rates): shards filtered one at a
-    time keep precisely the docs ``doremi_resample`` keeps over the
-    union (pinned in tests, per-batch and cumulative), the frozen-
-    reference streaming rule (a running cross-batch refit would
-    retroactively change earlier keep decisions). Kept doc_ids are
-    written per-batch (overwrite partitions — replay idempotent)."""
-    from m12_kafkastreams_python_azure_spark.operators.curation import (
-        DOREMI_BUDGET_FRAC,
-        DOREMI_ETA,
-        DOREMI_SMOOTH,
-        doremi_weights,
+    twin of ``curation.doremi_resample``: per-domain keep RATES
+    (``curation.doremi_rates``) are fit once from the DoReMi weights
+    (the LM-scored mixture update — the expensive scorer pass is the
+    fit-once artifact) and every arriving shard is filtered against
+    them. Shards filtered one at a time keep precisely the docs
+    ``doremi_resample`` keeps over the union (pinned in tests, per-batch
+    and cumulative) — the frozen-reference streaming rule (a running
+    cross-batch refit would retroactively change earlier keep
+    decisions)."""
+    bf = curation.DOREMI_BUDGET_FRAC if budget_frac is None else budget_frac
+    e = curation.DOREMI_ETA if eta is None else eta
+    c = curation.DOREMI_SMOOTH if smooth is None else smooth
+    return _rate_processor(
+        fit_docs.sparkSession,
+        state_dir,
+        lambda: curation.doremi_rates(fit_docs, bf, e, c, group_col),
+        group_col,
+        id_col,
     )
-    from pyspark.sql.window import Window
-
-    bf = DOREMI_BUDGET_FRAC if budget_frac is None else budget_frac
-    e = DOREMI_ETA if eta is None else eta
-    c = DOREMI_SMOOTH if smooth is None else smooth
-    spark = fit_docs.sparkSession
-    rdir = f"{state_dir}/rates"
-    kdir = f"{state_dir}/kept"
-    if not dir_has_data(spark, rdir):
-        w = Window.partitionBy()
-        weights = doremi_weights(fit_docs, eta=e, smooth=c, group_col=group_col)
-        rates = (
-            fit_docs.groupBy(group_col)
-            .agg(F.count(F.lit(1)).alias("n_docs"))
-            .withColumn("n_total", F.sum("n_docs").over(w))
-            .join(weights.select(group_col, "weight"), group_col)
-            .withColumn(
-                "keep_prob",
-                F.least(
-                    F.lit(1.0),
-                    F.lit(float(bf))
-                    * F.col("n_total").cast("double")
-                    * F.col("weight")
-                    / F.col("n_docs").cast("double"),
-                ),
-            )
-            .select(group_col, "keep_prob")
-        )
-        rates.coalesce(1).write.mode("overwrite").parquet(rdir)
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        bspark = batch.sparkSession
-        rates = bspark.read.parquet(rdir)
-        u = (
-            F.conv(
-                F.substring(F.md5(F.col(id_col).cast("string")), 1, 13), 16, 10
-            ).cast("double")
-            + F.lit(0.5)
-        ) / F.lit(float(1 << 52))
-        kept = (
-            batch.join(F.broadcast(rates), group_col)
-            .filter(u < F.col("keep_prob"))
-            .select(F.col(id_col).alias("doc_id"), group_col)
-        )
-        kept.write.mode("overwrite").parquet(f"{kdir}/batch={batch_id}")
-
-    return _process
 
 
 def read_doremi_kept(spark: SparkSession, state_dir: str) -> DataFrame:
-    return spark.read.option("basePath", f"{state_dir}/kept").parquet(
-        f"{state_dir}/kept"
-    )
+    return read_batches(spark, f"{state_dir}/kept")
 
 
 def start_doremi_stream(
@@ -1004,13 +802,8 @@ def start_doremi_stream(
     """Streaming DoReMi resampling: fit-once rates (the LM-scored
     mixture weights), filter every micro-batch; ``read_doremi_kept``
     equals the batch operator's keep set over all shards seen."""
-    return (
-        docs.writeStream.foreachBatch(
-            doremi_batch_processor(fit_docs, state_dir, budget_frac)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    process = doremi_batch_processor(fit_docs, state_dir, budget_frac)
+    return start(docs, process, checkpoint_dir)
 
 
 # --------------------------------- streaming containment vs the corpus
@@ -1025,15 +818,12 @@ def containment_batch_processor(
     text_col: str = "text",
     id_col: str = "doc_id",
 ):
-    """foreachBatch function for ``start_containment_stream`` — the
-    streaming twin of ``dedup.containment_pairs``' subsumption
-    detection, completing the curation SEXTET (keep-best, decontam,
-    DSIR, temperature, CCNet, containment): arriving documents are
-    checked for n-gram containment AGAINST A FIXED REFERENCE CORPUS
-    ("is this page an excerpt of something we already hold, or is a
-    held page an excerpt of it") using artifacts built exactly once at
-    processor construction (``dedup.build_containment_ref`` — the
-    fit-once discipline every member of the set shares).
+    """foreachBatch function for streaming containment — the streaming
+    twin of ``dedup.containment_pairs``' subsumption detection:
+    arriving documents are checked for n-gram containment AGAINST A
+    FIXED REFERENCE CORPUS ("is this page an excerpt of something we
+    already hold, or is a held page an excerpt of it") using artifacts
+    fit once (``dedup.build_containment_ref``).
 
     Why this is the right streaming semantics (and why all-pairs
     containment stays batch-only): pairwise containment's ubiquity
@@ -1046,86 +836,40 @@ def containment_batch_processor(
     exactly — the decontaminate deployment shape, with containment's
     asymmetric metric.
 
-    State lifecycle: ``{state_dir}/model/{grams,sizes,hot}`` parquet
-    (written once; the reference side is exact-duplicate-collapsed per
-    the engine's duplicate law — see ``build_containment_ref``);
-    per-batch output overwrites ``{state_dir}/matches/batch=<id>`` (the
-    at-least-once replay discipline shared by the whole set)."""
-    from m12_kafkastreams_python_azure_spark.operators.dedup import (
-        CONTAIN_MAX_DF,
-        CONTAIN_THRESHOLD,
-        build_containment_ref,
-        containment_against,
-    )
+    State: ``{state_dir}/model/{grams,sizes,hot}`` (the reference side
+    is exact-duplicate-collapsed per the engine's duplicate law — see
+    ``build_containment_ref``); output ``{state_dir}/matches``, which
+    ``read_containment_matches`` reads back."""
+    thr = dedup.CONTAIN_THRESHOLD if threshold is None else threshold
+    cap = dedup.CONTAIN_MAX_DF if max_df is None else max_df
+    arts = ("model/grams", "model/sizes", "model/hot")
 
-    thr = CONTAIN_THRESHOLD if threshold is None else threshold
-    cap = CONTAIN_MAX_DF if max_df is None else max_df
-    spark = ref_docs.sparkSession
-    gdir = f"{state_dir}/model/grams"
-    sdir = f"{state_dir}/model/sizes"
-    hdir = f"{state_dir}/model/hot"
-    outdir = f"{state_dir}/matches"
-    if not (
-        dir_has_data(spark, gdir)
-        and dir_has_data(spark, sdir)
-        and dir_has_data(spark, hdir)
-    ):
-        rare, sizes, hot = build_containment_ref(
-            ref_docs.select(
-                F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-            ),
-            n=n,
-            max_df=cap,
+    def _fit():
+        rare, sizes, hot = dedup.build_containment_ref(
+            _id_text(ref_docs, id_col, text_col), n=n, max_df=cap
         )
-        rare.write.mode("overwrite").parquet(gdir)
-        sizes.coalesce(1).write.mode("overwrite").parquet(sdir)
-        hot.coalesce(1).write.mode("overwrite").parquet(hdir)
+        return rare, sizes.coalesce(1), hot.coalesce(1)
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        bspark = batch.sparkSession
-        rare = bspark.read.parquet(gdir)
-        sizes = bspark.read.parquet(sdir)
-        hot = bspark.read.parquet(hdir)
-        out = containment_against(
-            batch.select(
-                F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-            ),
+    _fit_once(ref_docs.sparkSession, state_dir, arts, _fit)
+
+    def _transform(
+        batch: DataFrame, rare: DataFrame, sizes: DataFrame, hot: DataFrame
+    ) -> DataFrame:
+        return dedup.containment_against(
+            _id_text(batch, id_col, text_col),
             rare,
             sizes,
             hot,
             n=n,
             threshold=thr,
         )
-        out.write.mode("overwrite").parquet(f"{outdir}/batch={batch_id}")
 
-    return _process
+    return _per_batch(state_dir, arts, "matches", _transform)
 
 
 def read_containment_matches(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Containment matches found by the stream so far (union of batch
-    partitions; ``batch`` column retained for audit)."""
-    return spark.read.option("basePath", f"{state_dir}/matches").parquet(
-        f"{state_dir}/matches"
-    )
-
-
-def start_containment_stream(
-    docs: DataFrame,
-    ref_docs: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Streaming containment screening: fit-once reference artifacts,
-    then every micro-batch's docs are matched against the frozen
-    reference corpus; ``read_containment_matches`` reproduces the batch
-    ``containment_against`` output over all shards seen."""
-    return (
-        docs.writeStream.foreachBatch(
-            containment_batch_processor(ref_docs, state_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    """Containment matches found by the stream so far."""
+    return read_batches(spark, f"{state_dir}/matches")
 
 
 # ---------------------------- streaming soft-dedup weights vs the corpus
@@ -1139,92 +883,48 @@ def soft_dedup_batch_processor(
     text_col: str = "text",
     id_col: str = "doc_id",
 ):
-    """foreachBatch function for ``start_soft_dedup_stream`` — the
-    streaming member of the reweighting family (VERDICT r14 #5),
-    growing the curation set to a SEPTET: arriving documents get a
-    SoftDeDup sampling weight scored against a FROZEN reference gram-df
-    table built exactly once at processor construction
-    (``dedup.build_soft_dedup_ref`` — the fit-once discipline every
-    member of the set shares).
+    """foreachBatch function for streaming soft-dedup — the streaming
+    member of the reweighting family (VERDICT r14 #5): arriving
+    documents get a SoftDeDup sampling weight scored against a FROZEN
+    reference gram-df table fit once (``dedup.build_soft_dedup_ref``).
 
     Why this is the right streaming semantics (and why whole-corpus
-    ``soft_dedup_weights`` stays batch-only — ROADMAP "streaming
-    soft-dedup", the containment precedent): the batch operator's
-    commonness denominator is the WHOLE corpus's gram document
-    frequency — a per-batch df is meaningless, and a running
-    cross-batch df would retroactively change earlier docs' weights
-    (no longer stream == batch). Against frozen artifacts a doc's
-    weight is a pure function of (its grams, the artifacts), so
-    shard-invariance and replay idempotence hold exactly — and the
-    frozen estimator is deliberately membership-free (df/N, not the
-    in-corpus (df-1)/(N-1); see ``dedup.soft_dedup_against``).
+    ``soft_dedup_weights`` stays batch-only, the containment
+    precedent): the batch operator's commonness denominator is the
+    WHOLE corpus's gram document frequency — a per-batch df is
+    meaningless, and a running cross-batch df would retroactively change
+    earlier docs' weights (no longer stream == batch). Against frozen
+    artifacts a doc's weight is a pure function of (its grams, the
+    artifacts), so shard-invariance and replay idempotence hold exactly
+    — and the frozen estimator is deliberately membership-free (df/N,
+    not the in-corpus (df-1)/(N-1); see ``dedup.soft_dedup_against``).
 
-    State lifecycle: ``{state_dir}/model/{dfreq,meta}`` parquet (written
-    once; the reference df deliberately counts replicas — duplication
-    IS the commonness signal, see ``build_soft_dedup_ref``); per-batch
-    output overwrites ``{state_dir}/weights/batch=<id>`` (the
-    at-least-once replay discipline shared by the whole set)."""
-    from m12_kafkastreams_python_azure_spark.operators.dedup import (
-        SOFT_DEDUP_GAMMA,
-        build_soft_dedup_ref,
-        soft_dedup_against,
-    )
+    State: ``{state_dir}/model/{dfreq,meta}`` (the reference df
+    deliberately counts replicas — duplication IS the commonness
+    signal, see ``build_soft_dedup_ref``); output
+    ``{state_dir}/weights``, which ``read_soft_dedup_weights`` reads
+    back."""
+    gam = dedup.SOFT_DEDUP_GAMMA if gamma is None else gamma
+    arts = ("model/dfreq", "model/meta")
 
-    gam = SOFT_DEDUP_GAMMA if gamma is None else gamma
-    spark = ref_docs.sparkSession
-    ddir = f"{state_dir}/model/dfreq"
-    mdir = f"{state_dir}/model/meta"
-    outdir = f"{state_dir}/weights"
-    if not (dir_has_data(spark, ddir) and dir_has_data(spark, mdir)):
-        dfreq, meta = build_soft_dedup_ref(
-            ref_docs.select(
-                F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-            ),
-            n=n,
+    def _fit():
+        dfreq, meta = dedup.build_soft_dedup_ref(
+            _id_text(ref_docs, id_col, text_col), n=n
         )
-        dfreq.write.mode("overwrite").parquet(ddir)
-        meta.coalesce(1).write.mode("overwrite").parquet(mdir)
+        return dfreq, meta.coalesce(1)
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        bspark = batch.sparkSession
-        dfreq = bspark.read.parquet(ddir)
-        meta = bspark.read.parquet(mdir)
-        out = soft_dedup_against(
-            batch.select(
-                F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-            ),
-            dfreq,
-            meta,
-            n=n,
-            gamma=gam,
+    _fit_once(ref_docs.sparkSession, state_dir, arts, _fit)
+
+    def _transform(
+        batch: DataFrame, dfreq: DataFrame, meta: DataFrame
+    ) -> DataFrame:
+        return dedup.soft_dedup_against(
+            _id_text(batch, id_col, text_col), dfreq, meta, n=n, gamma=gam
         )
-        out.write.mode("overwrite").parquet(f"{outdir}/batch={batch_id}")
 
-    return _process
+    return _per_batch(state_dir, arts, "weights", _transform)
 
 
 def read_soft_dedup_weights(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Per-doc weights scored by the stream so far (union of batch
-    partitions; ``batch`` column retained for audit)."""
-    return spark.read.option("basePath", f"{state_dir}/weights").parquet(
-        f"{state_dir}/weights"
-    )
-
-
-def start_soft_dedup_stream(
-    docs: DataFrame,
-    ref_docs: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Streaming soft-dedup reweighting: fit-once frozen gram-df
-    artifacts, then every micro-batch's docs are weight-scored against
-    them; ``read_soft_dedup_weights`` reproduces the batch
-    ``soft_dedup_against`` output over all shards seen."""
-    return (
-        docs.writeStream.foreachBatch(
-            soft_dedup_batch_processor(ref_docs, state_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    """Per-doc weights scored by the stream so far."""
+    return read_batches(spark, f"{state_dir}/weights")

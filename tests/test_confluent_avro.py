@@ -69,8 +69,8 @@ def test_decode_body_via_spark_avro(spark):
         pytest.skip(
             "spark-avro expression classes (AvroDataToCatalyst/"
             "CatalystDataToAvro) are in NO bundled jar and the sandbox "
-            "has no network for --packages — proven unloadable, see "
-            "docs/ROADMAP.md round-18 note #4"
+            "has no network for --packages — proven unloadable in round "
+            "18: only AvroFileFormat + SchemaConverters ship in spark-sql"
         )
     from pyspark.sql.avro.functions import to_avro
 

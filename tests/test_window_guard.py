@@ -67,23 +67,19 @@ ALLOWED: dict[tuple[str, str], str] = {
         "running bucket-total over the |buckets|-row bucket aggregate "
         "(the two-phase budget fill that exists to AVOID a corpus-wide "
         "cumsum window); serves token/weighted_budget_select",
-    ("operators/curation.py", "temperature_sample"):
+    ("operators/curation.py", "temperature_rates"):
         "rates window over the |langs|-row per-language aggregate",
     ("operators/curation.py", "unimax_allocation"):
         "budget allocation over the |langs|-row per-language table",
     ("operators/curation.py", "doremi_weights"):
         "corpus-baseline fold-in over the |domains|-row score aggregate",
-    ("operators/curation.py", "doremi_resample"):
+    ("operators/curation.py", "doremi_rates"):
         "total over the |domains|-row per-domain count table",
     ("operators/dsir.py", "dsir_weights"):
         "model totals as windows over the 256-row hash-bucket spine "
         "(saves two corpus scans; dsir.py wall note)",
     ("operators/dsir.py", "dsir_model_tables"):
         "same 256-row bucket spine for the persisted fit-once tables",
-    ("streaming/advanced.py", "temperature_batch_processor"):
-        "per-micro-batch rates over the |langs|-row fit table",
-    ("streaming/advanced.py", "doremi_batch_processor"):
-        "per-micro-batch total over the |domains|-row weights table",
 }
 
 
