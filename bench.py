@@ -272,6 +272,11 @@ EAGER_QUERIES = {
     # collapse AND candidate persists (two count barriers) eagerly
     "containment_screened",
     "subsumption_prune",
+    # the ksql CTAS is pinned at DDL time (ksql pin rule: batch,
+    # deterministic, immutable leaves), so construction runs the
+    # aggregate; ksql_topk / ksql_topk_distinct stay lazy views — their
+    # pre-prune reads spark_partition_id(), which is non-deterministic
+    "ksql_histogram",
 }
 
 

@@ -10,13 +10,31 @@ accepts each payload's SQL string (ksql dialect) and maps it onto Spark SQL:
   -> schema-on-read projection over the registered source for that topic
   (a DataFrame registered under the topic name — batch or streaming), i.e.
   ksql's "stream = SQL view over a topic" semantics (SURVEY.md §1.1).
-- ``CREATE TABLE name AS SELECT ... GROUP BY ...`` -> a Spark SQL view.
-  ``COUNT_DISTINCT`` (ksql spelling) is rewritten to ANSI
+- ``CREATE TABLE name AS SELECT ... GROUP BY ...`` -> a materialized
+  table when the analyzed plan allows it, else a lazy Spark SQL view.
+  Pin rule: a plan that is batch, ``deterministic()`` and whose every
+  leaf (subqueries included) is an immutable relation — a path-based
+  file scan, a ``LocalRelation``, a ``Range``, or a table this context
+  already pinned — is computed ONCE at DDL time into a lineage-cut
+  ``localCheckpoint`` and the view reads those rows: ksqlDB's persistent
+  query keeping the aggregate in a state store, so a pull query reads
+  state instead of re-running the flow. Lineage is cut on purpose: a
+  ``persist()`` would let a later plan over the same paths match the
+  cached result and serve it stale. Any other plan stays lazy and is
+  re-evaluated per pull: memory-sink leaves of a streaming source table,
+  the TOPK pre-prune (``spark_partition_id`` is non-deterministic), a
+  non-deterministic UDF. Either way a CTAS is BOUND at DDL time to the
+  file listing and topic DataFrame it reads: a new file or a
+  re-registered topic shows up once the DDL is re-issued (which releases
+  the name's previous pin), never before — so pinning changes no result;
+  only time functions such as ``current_timestamp()`` in a pinned table
+  are evaluated once, at DDL time, as a ksqlDB table row is stamped when
+  it is computed. ``COUNT_DISTINCT`` (ksql spelling) is rewritten to ANSI
   ``COUNT(DISTINCT ...)`` — exact in batch; the streaming variant lives in
   ``streaming.pipeline`` (approx HLL or exact two-phase, SURVEY.md §7).
 - ``SELECT ... EMIT CHANGES`` -> the continuous form; in batch context the
-  EMIT CHANGES suffix is stripped (a pull query over the current state —
-  each batch evaluation IS the latest changelog snapshot).
+  EMIT CHANGES suffix is stripped (a pull query over the tables as of
+  their last DDL).
 
 Beyond the reference's three statements, the dialect subset a typical ksql
 deployment uses is also translated (widening drop-in compatibility):
@@ -116,17 +134,20 @@ deployment uses is also translated (widening drop-in compatibility):
 - Table-table joins: ``SELECT ... FROM t1 JOIN t2 ON t1.k = t2.k``
   over two (source or CTAS) tables evaluates over each table's CURRENT
   state — ksqlDB's table-table join semantics re-expressed as a pull
-  query over materialized views. Batch tables are plain views, so the
-  join passes through to Spark SQL. A source table whose changelog
-  topic is a STREAMING DataFrame is MATERIALIZED at DDL time: the
-  same ``max_by(struct, rowtime)`` compaction runs as a streaming
-  aggregation into a complete-mode in-memory sink (Spark cannot join
+  query over materialized views. Batch tables are views (pinned or
+  lazy, see CTAS above), so the join passes through to Spark SQL. A
+  source table whose changelog topic is a STREAMING DataFrame is
+  MATERIALIZED at DDL time: the same ``max_by(struct, rowtime)``
+  compaction runs as a streaming aggregation into a complete-mode
+  in-memory sink (Spark cannot join
   two streaming aggregations directly — the materialize-then-join
   split is the Spark-native spelling of ksqlDB's RocksDB-backed table
   join, and the memory table after each micro-batch IS the compacted
   table). ``process_available()`` advances all such materializations;
-  joins then read the refreshed state. Pinned against a DuckDB twin
-  AND run with a real streaming changelog in tests/test_ksql.py.
+  joins then read the refreshed state. Re-issuing the DDL stops the
+  name's running query before starting the new one. Pinned against a
+  DuckDB twin AND run with a real streaming changelog in
+  tests/test_ksql.py.
 
 Only the dialect subset described above is translated; anything else
 passes through to ``spark.sql`` untouched.
@@ -138,6 +159,7 @@ import json
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 _KSQL_TO_SPARK_TYPES = {
     "BIGINT": "BIGINT",
@@ -305,6 +327,16 @@ def _mask(sql: str) -> str:
     )
 
 
+def _seq(jseq) -> list:
+    """A JVM Scala ``Seq`` as a Python list."""
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _pinned_rdd(df: DataFrame):
+    """The checkpointed JVM RDD behind a ``localCheckpoint`` result."""
+    return df._jdf.queryExecution().analyzed().rdd()
+
+
 def _map_outside_literals(sql: str, fn) -> str:
     """Apply ``fn`` to every segment of ``sql`` OUTSIDE single-quoted
     string literals, leaving the literals byte-identical — so a statement
@@ -327,7 +359,19 @@ class KsqlContext:
     df)`` is the analog of the topic existing on the broker. CREATE STREAM
     then projects its declared columns from that source (schema-on-read:
     undeclared fields are ignored), CREATE TABLE AS registers the aggregate
-    as a view, and SELECT returns a DataFrame.
+    under the table's name, and SELECT returns a DataFrame.
+
+    Every DDL binds its name at DDL time to the topic DataFrames and file
+    listings it reads. A CTAS whose plan is batch, deterministic and reads
+    only immutable leaves (file scans, local rows, ranges, this context's
+    own pinned tables) is pinned then: computed once into a lineage-cut
+    ``localCheckpoint`` that pull queries read; any other CTAS stays a lazy
+    view (module docstring). The context OWNS its materializations, one
+    entry per name: the pinned DataFrame of a CTAS or the streaming query
+    of a streaming source table. Re-issuing a name's DDL releases its
+    previous entry (unpersists the pin / stops the query), and
+    ``stop_all`` releases every entry; a DataFrame obtained from a
+    released pin can no longer be evaluated — SELECT the table again.
     """
 
     def __init__(self, spark: SparkSession) -> None:
@@ -352,8 +396,9 @@ class KsqlContext:
         # re-registered view (new DataFrame under the same name) gets a
         # fresh watermark view, never a stale one.
         self._wm_cache: dict[tuple[str, str, str], tuple[str, DataFrame]] = {}
-        # running materializations of streaming source tables, by name
-        self._queries: dict[str, object] = {}
+        # one materialization per name: the StreamingQuery of a streaming
+        # source table, or the pinned DataFrame of a batch CTAS
+        self._materialized: dict[str, StreamingQuery | DataFrame] = {}
 
     def _watermarked_view(self, side: str, delay: str) -> str:
         """Memoized statement-local watermark view over ``side``'s
@@ -379,13 +424,61 @@ class KsqlContext:
     def process_available(self) -> None:
         """Advance every streaming source-table materialization to the end
         of its currently-available input (the test/pull-query barrier)."""
-        for q in self._queries.values():
-            q.processAllAvailable()
+        for m in self._materialized.values():
+            if isinstance(m, StreamingQuery):
+                m.processAllAvailable()
 
     def stop_all(self) -> None:
-        for q in self._queries.values():
-            q.stop()
-        self._queries.clear()
+        """Release every materialization: stop the streaming queries and
+        unpersist the pinned tables."""
+        for name in list(self._materialized):
+            self._release(name)
+
+    def _release(self, name: str) -> None:
+        m = self._materialized.pop(name, None)
+        if isinstance(m, StreamingQuery):
+            m.stop()
+        elif m is not None:
+            _pinned_rdd(m).unpersist(False)
+
+    def _bind(self, name: str, out: DataFrame) -> DataFrame:
+        """Register ``out`` as the view ``name``, releasing the name's
+        previous materialization: re-issued DDL replaces, never leaks."""
+        self._release(name)
+        out.createOrReplaceTempView(name)
+        self._views[name] = out
+        return out
+
+    def _pinnable(self, df: DataFrame) -> bool:
+        """The pin rule: ``df``'s analyzed plan, and every subquery in it,
+        is batch and deterministic, and each leaf is an immutable relation
+        — a path-based file scan (its listing is fixed when the DataFrame
+        is built), local rows, a range, or one of this context's pins."""
+        plan = df._jdf.queryExecution().analyzed()
+        pins = {
+            _pinned_rdd(m).id()
+            for m in self._materialized.values()
+            if isinstance(m, DataFrame)
+        }
+
+        def immutable(leaf) -> bool:
+            kind = leaf.getClass().getSimpleName()
+            if kind == "LogicalRelation":
+                return (
+                    leaf.relation().getClass().getSimpleName()
+                    == "HadoopFsRelation"
+                    and leaf.catalogTable().isEmpty()
+                )
+            if kind == "LogicalRDD":
+                return leaf.rdd().id() in pins
+            return kind in ("LocalRelation", "Range")
+
+        return all(
+            not p.isStreaming()
+            and p.deterministic()
+            and all(immutable(leaf) for leaf in _seq(p.collectLeaves()))
+            for p in [plan, *_seq(plan.subqueriesAll())]
+        )
 
     # -- statement execution ----------------------------------------------
     def execute(self, payload_or_sql: str) -> DataFrame | None:
@@ -440,9 +533,7 @@ class KsqlContext:
                 exprs.append(f"CAST({cname} AS {ctype}) AS {cname}")
             else:
                 exprs.append(f"CAST(NULL AS {ctype}) AS {cname}")
-        out = src.selectExpr(*exprs)
-        out.createOrReplaceTempView(name)
-        self._views[name] = out
+        out = self._bind(name, src.selectExpr(*exprs))
         if rowtime is not None:
             if rowtime not in out.columns:
                 raise ValueError(
@@ -543,26 +634,31 @@ class KsqlContext:
                     "the latest row per key (offset order is not "
                     "observable from a DataFrame registration)"
                 )
+            # the memory sink registers the view under the query name,
+            # so the name's previous query must stop first
+            self._release(name)
             q = (
                 out.writeStream.format("memory")
                 .queryName(name)
                 .outputMode("complete")
                 .start()
             )
-            self._queries[name] = q
+            self._materialized[name] = q
             q.processAllAvailable()
             out = self.spark.table(name)
             self._views[name] = out
             return out
-        out.createOrReplaceTempView(name)
-        self._views[name] = out
-        return out
+        return self._bind(name, out)
 
     def _create_table(self, name: str, select: str) -> DataFrame:
+        """CTAS: pinned at DDL time when the pin rule allows, else a lazy
+        view (module docstring)."""
         out = self.spark.sql(self._rewrite_select(select))
-        out.createOrReplaceTempView(name)
-        self._views[name] = out
-        return out
+        if not self._pinnable(out):
+            return self._bind(name, out)
+        pinned = self._bind(name, out.localCheckpoint(eager=True))
+        self._materialized[name] = pinned
+        return pinned
 
     def _create_stream_as(self, name: str, select: str) -> DataFrame:
         """CSAS: a derived stream. Registered as both view and topic so it
@@ -609,8 +705,7 @@ class KsqlContext:
             from pyspark.sql import functions as F
 
             out = out.repartition(F.col(part_col))
-        out.createOrReplaceTempView(name)
-        self._views[name] = out
+        self._bind(name, out)
         self._topics[name] = out
         # event time survives derivation if the source's rowtime column is
         # still present in the output (ksql keeps ROWTIME implicitly).
@@ -1154,9 +1249,10 @@ class KsqlContext:
         return _map_outside_literals(select, insert_once)
 
     def _select(self, sql: str) -> DataFrame:
-        # EMIT CHANGES: continuous push query. Over batch state, evaluating
-        # the view IS the current changelog snapshot (the streaming update
-        # path lives in streaming.pipeline). Same dialect rewrites as CTAS
+        # EMIT CHANGES: continuous push query. Over batch state it reads
+        # the tables as of their last DDL — a pinned table's stored rows
+        # or a lazy view's evaluation (the streaming update path lives in
+        # streaming.pipeline). Same dialect rewrites as CTAS
         # (COUNT_DISTINCT, UCASE/LCASE, WINDOW ...) apply to push queries.
         return self.spark.sql(self._rewrite_select(sql))
 

@@ -1713,3 +1713,110 @@ def test_topk_lowercase_and_alias_forms(events_ctx):
         ).collect()
     }
     assert got == want
+
+
+# ------------------------------ materialization lifecycle and the pin rule
+
+
+def _users_stream(spark, ctx, d):
+    """Register a file-stream changelog topic over ``d`` (k, v, ts)."""
+    ctx.register_topic(
+        "users_topic",
+        spark.readStream.schema("k long, v string, ts timestamp").json(str(d)),
+    )
+
+
+def _land_users(d, name, rows):
+    import json as _json
+
+    with open(d / name, "w") as fh:
+        for k, v, day in rows:
+            fh.write(
+                _json.dumps({"k": k, "v": v, "ts": f"2024-01-0{day} 00:00:00"})
+                + "\n"
+            )
+
+
+USERS_DDL = (
+    "CREATE TABLE users_rt (k BIGINT PRIMARY KEY, v VARCHAR, ts TIMESTAMP) "
+    "WITH (KAFKA_TOPIC='users_topic', TIMESTAMP='ts');"
+)
+
+
+def test_reissued_streaming_source_table_ddl_replaces_its_query(
+    spark, tmp_path
+):
+    """The reference write path re-issues its DDL; for a streaming
+    source table that must stop the name's query and start one new one,
+    not fail on the query name."""
+    d = tmp_path / "users"
+    d.mkdir()
+    _land_users(d, "p0.json", [(1, "a", 1), (2, "b", 1)])
+    ctx = KsqlContext(spark)
+    try:
+        _users_stream(spark, ctx, d)
+        ctx.execute(USERS_DDL)
+        _land_users(d, "p1.json", [(1, "c", 2)])
+        _users_stream(spark, ctx, d)
+        tbl = ctx.execute(USERS_DDL)
+        assert [q.name for q in spark.streams.active].count("users_rt") == 1
+        assert sorted((r.k, r.v) for r in tbl.collect()) == [(1, "c"), (2, "b")]
+    finally:
+        ctx.stop_all()
+    assert "users_rt" not in [q.name for q in spark.streams.active]
+
+
+def test_ctas_stays_lazy_over_streaming_or_nondeterministic_plans(
+    spark, tmp_path
+):
+    """Only a batch, deterministic plan over immutable leaves pins. A
+    CTAS over a streaming source table's memory sink follows new
+    micro-batches; a CTAS with a non-deterministic UDF re-runs per pull;
+    the same CTAS with the UDF declared deterministic pins (control)."""
+    from pyspark.sql import functions as F
+
+    d = tmp_path / "users"
+    d.mkdir()
+    _land_users(d, "p0.json", [(1, "a", 1), (2, "b", 1)])
+    probe = tmp_path / "probe.txt"
+    probe.write_text("old")
+    path = str(probe)
+    spark.udf.register(
+        "ksql_probe_nd",
+        F.udf(lambda _: open(path).read(), "string").asNondeterministic(),
+    )
+    spark.udf.register(
+        "ksql_probe_det", F.udf(lambda _: open(path).read(), "string")
+    )
+    ctx = KsqlContext(spark)
+    ctx.register_topic("nd_topic", spark.range(6))
+    ctx.execute(
+        "CREATE STREAM nd (id BIGINT) WITH (KAFKA_TOPIC='nd_topic', "
+        "VALUE_FORMAT='JSON');"
+    )
+
+    def probe_values(table: str) -> set[str]:
+        return {r.p for r in ctx.execute(f"SELECT * FROM {table};").collect()}
+
+    try:
+        _users_stream(spark, ctx, d)
+        ctx.execute(USERS_DDL)
+        ctx.execute(
+            "CREATE TABLE users_n AS SELECT COUNT(*) AS n FROM users_rt;"
+        )
+        assert ctx.execute("SELECT n FROM users_n;").first().n == 2
+        _land_users(d, "p1.json", [(3, "c", 2)])
+        ctx.process_available()
+        assert ctx.execute("SELECT n FROM users_n;").first().n == 3
+
+        for fn in ("nd", "det"):
+            ctx.execute(
+                f"CREATE TABLE probe_{fn} AS SELECT id % 2 AS k, "
+                f"ksql_probe_{fn}(id) AS p FROM nd;"
+            )
+        assert probe_values("probe_nd") == probe_values("probe_det") == {"old"}
+        probe.write_text("new")
+        assert probe_values("probe_nd") == {"new"}
+        assert probe_values("probe_det") == {"old"}
+    finally:
+        ctx.stop_all()

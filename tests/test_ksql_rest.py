@@ -147,3 +147,166 @@ def test_query_serializes_timestamps(rest, spark):
     assert status == 200
     assert sum(r["row"]["columns"][1] for r in rows) == 10
     assert all(isinstance(r["row"]["columns"][0], str) for r in rows)
+
+
+# ------------------------------ pinned CTAS: DDL-time state, never stale
+
+
+def _land(d, name: str, n: int, seed: int) -> None:
+    """One seeded JSON-lines ingest file of ``n`` expedia rows."""
+    with open(d / name, "w") as fh:
+        for r in gen_expedia_rows(n, seed=seed):
+            fh.write(json.dumps(r) + "\n")
+
+
+def _flow_table(df) -> dict:
+    return {r[0]: (r[1], r[2]) for r in df.collect()}
+
+
+def _stored_rdds(spark) -> set[int]:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+class _FileFlow:
+    """The reference write path over JSON files in ``d``: the topic is
+    ingest + mask -> enrich over the directory, both DDL payloads go over
+    ``/ksql`` and pulls over ``/query``."""
+
+    def __init__(self, spark, d):
+        self.spark, self.d = spark, d
+        self.ctx = KsqlContext(spark)
+        self.server = KsqlRestServer(self.ctx)
+
+    def register(self) -> None:
+        from m12_kafkastreams_python_azure_spark.flow import MASK
+        from m12_kafkastreams_python_azure_spark.sources.readers import (
+            read_ingest_files,
+        )
+
+        raw = read_ingest_files(self.spark, str(self.d), EXPEDIA_SCHEMA, mask=MASK)
+        self.ctx.register_topic("expedia_ext", enrich_expedia(raw))
+        for stmt in (CREATE_STREAM, CREATE_TABLE):
+            assert _post(self.server, "/ksql", stmt)[0] == 200
+
+    def pull(self) -> dict:
+        status, rows = _post(self.server, "/query", SELECT_HOTELS)
+        assert status == 200, rows
+        return {r["row"]["columns"][0]: tuple(r["row"]["columns"][1:3]) for r in rows}
+
+    def close(self) -> None:
+        self.ctx.stop_all()
+        self.server.close()
+
+
+def test_pinned_table_is_never_stale_nor_served_to_other_plans(spark, tmp_path):
+    """hotels_count over JSON files pins at DDL time. After a file lands,
+    a fresh flow and a second context over the same directory see it (a
+    persist()-based pin would plan-match the second context's CTAS and
+    serve it the old counts); the table itself keeps its DDL-time state
+    until both payloads are re-issued; re-issues hold one live pin and
+    stop_all releases it."""
+    from m12_kafkastreams_python_azure_spark.flow import reference_flow_batch
+
+    d = tmp_path / "ingest"
+    d.mkdir()
+    for k in range(3):
+        _land(d, f"part-{k}.json", 400, seed=k)
+    before = _stored_rdds(spark)
+    flow = _FileFlow(spark, d)
+    try:
+        flow.register()
+        assert "hotels_count" in flow.ctx._materialized
+        old = flow.pull()
+        assert old == _flow_table(reference_flow_batch(spark, str(d)))
+        assert sum(a for a, _ in old.values()) == 1200
+
+        _land(d, "part-3.json", 300, seed=3)
+        new = _flow_table(reference_flow_batch(spark, str(d)))
+        assert sum(a for a, _ in new.values()) == 1500
+        assert flow.pull() == old  # bound to its DDL-time listing
+        # a second context's identical DDL plans the same query as the
+        # live pin, over the same paths: it must not be served that pin
+        other = _FileFlow(spark, d)
+        try:
+            other.register()
+            assert other.pull() == new
+        finally:
+            other.close()
+
+        for _ in range(3):
+            flow.register()
+            assert flow.pull() == new
+            assert len(_stored_rdds(spark) - before) == 1
+    finally:
+        flow.close()
+    assert not _stored_rdds(spark) - before
+
+
+def test_concurrent_pulls_survive_reissued_ddl(spark, tmp_path):
+    """Pull threads (more than cores) hammer /query while the write path
+    lands files and re-issues both payloads: every pull succeeds and
+    returns the table as of one of the DDLs, never a released pin."""
+    import sys
+    import threading
+
+    from m12_kafkastreams_python_azure_spark.flow import reference_flow_batch
+
+    d = tmp_path / "ingest"
+    d.mkdir()
+    _land(d, "part-0.json", 200, seed=0)
+    flow = _FileFlow(spark, d)
+    states = []
+    results, errors = [], []
+    done = threading.Event()
+
+    def puller() -> None:
+        while not done.is_set():
+            try:
+                results.append(flow.pull())
+            except AssertionError as exc:
+                errors.append(exc)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    threads = [threading.Thread(target=puller) for _ in range(8)]
+    try:
+        flow.register()
+        states.append(_flow_table(reference_flow_batch(spark, str(d))))
+        for t in threads:
+            t.start()
+        for k in range(1, 4):
+            _land(d, f"part-{k}.json", 50, seed=k)
+            flow.register()
+            states.append(_flow_table(reference_flow_batch(spark, str(d))))
+    finally:
+        done.set()
+        for t in threads:
+            t.join(120)
+        sys.setswitchinterval(switch)
+        flow.close()
+    assert not any(t.is_alive() for t in threads)
+    assert not errors and results
+    assert all(r in states for r in results)
+
+
+def test_statement_waits_for_in_flight_queries():
+    """A /ksql statement takes the server lock alone and /query requests
+    share it, so re-issued DDL never releases a pin under a pull."""
+    import threading
+
+    from m12_kafkastreams_python_azure_spark.ksql_rest import _SharedLock
+
+    lock = _SharedLock()
+    ran = []
+
+    def statement() -> None:
+        with lock.exclusive():
+            ran.append("ddl")
+
+    with lock.shared(), lock.shared():  # queries run side by side
+        t = threading.Thread(target=statement)
+        t.start()
+        t.join(0.3)
+        assert t.is_alive() and not ran
+    t.join(10)
+    assert not t.is_alive() and ran == ["ddl"]
