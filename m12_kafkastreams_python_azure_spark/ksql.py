@@ -12,10 +12,12 @@ accepts each payload's SQL string (ksql dialect) and maps it onto Spark SQL:
   ksql's "stream = SQL view over a topic" semantics (SURVEY.md §1.1).
 - ``CREATE TABLE name AS SELECT ... GROUP BY ...`` -> a materialized
   table when the analyzed plan allows it, else a lazy Spark SQL view.
-  Pin rule: a plan that is batch, ``deterministic()`` and whose every
-  leaf (subqueries included) is an immutable relation — a path-based
-  file scan, a ``LocalRelation``, a ``Range``, or a table this context
-  already pinned — is computed ONCE at DDL time into a lineage-cut
+  Pin rule: a plan that is batch, ``deterministic()``, free of time
+  functions (``current_timestamp()``, ``now()``, ``current_date()`` ...)
+  and whose every leaf (subqueries included) is an immutable relation —
+  a path-based file scan, a ``LocalRelation``, a ``Range``, or a table
+  this context already pinned — is computed ONCE at DDL time into a
+  lineage-cut
   ``localCheckpoint`` and the view reads those rows: ksqlDB's persistent
   query keeping the aggregate in a state store, so a pull query reads
   state instead of re-running the flow. Lineage is cut on purpose: a
@@ -23,13 +25,14 @@ accepts each payload's SQL string (ksql dialect) and maps it onto Spark SQL:
   cached result and serve it stale. Any other plan stays lazy and is
   re-evaluated per pull: memory-sink leaves of a streaming source table,
   the TOPK pre-prune (``spark_partition_id`` is non-deterministic), a
-  non-deterministic UDF. Either way a CTAS is BOUND at DDL time to the
-  file listing and topic DataFrame it reads: a new file or a
-  re-registered topic shows up once the DDL is re-issued (which releases
-  the name's previous pin), never before — so pinning changes no result;
-  only time functions such as ``current_timestamp()`` in a pinned table
-  are evaluated once, at DDL time, as a ksqlDB table row is stamped when
-  it is computed. ``COUNT_DISTINCT`` (ksql spelling) is rewritten to ANSI
+  non-deterministic UDF, a time function. Either way a CTAS is BOUND at
+  DDL time to the file listing and topic DataFrame it reads: a new file
+  or a re-registered topic shows up once the DDL is re-issued, never
+  before — so pinning changes no result. Re-issuing the DDL only drops
+  the context's hold on the old pin; a view, stream or DataFrame that
+  still reads the old table keeps its rows, and Spark's ContextCleaner
+  reclaims them when the last such reader is gone.
+  ``COUNT_DISTINCT`` (ksql spelling) is rewritten to ANSI
   ``COUNT(DISTINCT ...)`` — exact in batch; the streaming variant lives in
   ``streaming.pipeline`` (approx HLL or exact two-phase, SURVEY.md §7).
 - ``SELECT ... EMIT CHANGES`` -> the continuous form; in batch context the
@@ -362,16 +365,17 @@ class KsqlContext:
     under the table's name, and SELECT returns a DataFrame.
 
     Every DDL binds its name at DDL time to the topic DataFrames and file
-    listings it reads. A CTAS whose plan is batch, deterministic and reads
-    only immutable leaves (file scans, local rows, ranges, this context's
-    own pinned tables) is pinned then: computed once into a lineage-cut
-    ``localCheckpoint`` that pull queries read; any other CTAS stays a lazy
-    view (module docstring). The context OWNS its materializations, one
-    entry per name: the pinned DataFrame of a CTAS or the streaming query
-    of a streaming source table. Re-issuing a name's DDL releases its
-    previous entry (unpersists the pin / stops the query), and
-    ``stop_all`` releases every entry; a DataFrame obtained from a
-    released pin can no longer be evaluated — SELECT the table again.
+    listings it reads. A CTAS whose plan is batch, deterministic, free of
+    time functions and reads only immutable leaves (file scans, local
+    rows, ranges, this context's own pinned tables) is pinned then:
+    computed once into a lineage-cut ``localCheckpoint`` that pull queries
+    read; any other CTAS stays a lazy view (module docstring). The context
+    OWNS its materializations, one entry per name: the pinned DataFrame of
+    a CTAS or the streaming query of a streaming source table. Re-issuing
+    a name's DDL releases its previous entry: the query stops; the pin is
+    forgotten, and Spark reclaims its rows once no view, stream or
+    DataFrame reads them. ``stop_all`` releases every entry and drops the
+    pinned tables' names; re-issue a table's DDL to read it again.
     """
 
     def __init__(self, spark: SparkSession) -> None:
@@ -430,16 +434,22 @@ class KsqlContext:
 
     def stop_all(self) -> None:
         """Release every materialization: stop the streaming queries and
-        unpersist the pinned tables."""
-        for name in list(self._materialized):
+        drop the pinned tables' names."""
+        for name, m in list(self._materialized.items()):
             self._release(name)
+            if isinstance(m, DataFrame):
+                self.spark.catalog.dropTempView(name)
+                self._views.pop(name, None)
 
     def _release(self, name: str) -> None:
+        """Drop the context's hold on ``name``'s materialization: stop its
+        streaming query, or forget its pin. A pin is never unpersisted
+        here: other plans may still read it (a lazy join, a TOPK table, a
+        derived stream, a caller's DataFrame), and Spark's ContextCleaner
+        reclaims its checkpoint once the last of them is gone."""
         m = self._materialized.pop(name, None)
         if isinstance(m, StreamingQuery):
             m.stop()
-        elif m is not None:
-            _pinned_rdd(m).unpersist(False)
 
     def _bind(self, name: str, out: DataFrame) -> DataFrame:
         """Register ``out`` as the view ``name``, releasing the name's
@@ -451,13 +461,18 @@ class KsqlContext:
 
     def _pinnable(self, df: DataFrame) -> bool:
         """The pin rule: ``df``'s analyzed plan, and every subquery in it,
-        is batch and deterministic, and each leaf is an immutable relation
-        — a path-based file scan (its listing is fixed when the DataFrame
-        is built), local rows, a range, or one of this context's pins."""
+        is batch, deterministic and free of time functions (Spark's
+        ``CURRENT_LIKE`` pattern, which each pull would re-evaluate), and
+        each leaf is an immutable relation — a path-based file scan (its
+        listing is fixed when the DataFrame is built), local rows, a range,
+        or one of this context's pins."""
         plan = df._jdf.queryExecution().analyzed()
+        current_like = (
+            self.spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+        ).CURRENT_LIKE()
         pins = {
             _pinned_rdd(m).id()
-            for m in self._materialized.values()
+            for m in list(self._materialized.values())
             if isinstance(m, DataFrame)
         }
 
@@ -476,6 +491,7 @@ class KsqlContext:
         return all(
             not p.isStreaming()
             and p.deterministic()
+            and not p.containsPattern(current_like)
             and all(immutable(leaf) for leaf in _seq(p.collectLeaves()))
             for p in [plan, *_seq(plan.subqueriesAll())]
         )

@@ -15,14 +15,14 @@ statement handling to ``KsqlContext.execute``. Responses:
 - ``/ksql``  -> ``[{"statementText": ..., "status": "SUCCESS", "columns": [...]}]``
 - ``/query`` -> JSON array of ``{"row": {"columns": [...]}}`` objects —
   the shape of a ksql pull/push response body, materialized. A pull
-  reads each table as of its last DDL: a pinned CTAS (batch,
-  deterministic, immutable leaves — the pin rule in ``ksql``) serves the
-  rows computed once at DDL time, any other table re-evaluates its lazy
-  view; new input shows up once the client re-issues the DDL.
+  reads each table as of its last DDL: a pinned CTAS (the pin rule in
+  ``ksql``: batch, deterministic, no time functions, immutable leaves)
+  serves the rows computed once at DDL time, any other table re-evaluates
+  its lazy view; new input shows up once the client re-issues the DDL.
 
-Statements and queries share one lock: a ``/ksql`` statement runs alone,
-``/query`` requests run concurrently with each other, so re-issued DDL
-never releases a pinned table under an in-flight pull.
+Re-issued DDL never breaks an in-flight pull: the pull holds the plan
+it resolved, and a pinned table's rows live as long as any plan reads
+them.
 
 Scale note: this is a CONTROL-plane shim — statements and small result
 sets. Row streaming happens inside Spark; nothing row-sized ever funnels
@@ -34,7 +34,6 @@ from __future__ import annotations
 
 import json
 import threading
-from contextlib import contextmanager
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from .ksql import KsqlContext
@@ -54,42 +53,6 @@ def _json_default(v):
     if isinstance(v, bytes):
         return v.hex()
     return str(v)
-
-
-class _SharedLock:
-    """Many holders of ``shared()`` or one holder of ``exclusive()``. A
-    waiting ``exclusive()`` holds off new ``shared()`` entrants, so a
-    steady stream of queries cannot starve a statement."""
-
-    def __init__(self) -> None:
-        self._cond = threading.Condition()
-        self._shared = 0
-        self._exclusive = False
-
-    @contextmanager
-    def shared(self):
-        with self._cond:
-            self._cond.wait_for(lambda: not self._exclusive)
-            self._shared += 1
-        try:
-            yield
-        finally:
-            with self._cond:
-                self._shared -= 1
-                self._cond.notify_all()
-
-    @contextmanager
-    def exclusive(self):
-        with self._cond:
-            self._cond.wait_for(lambda: not self._exclusive)
-            self._exclusive = True
-            self._cond.wait_for(lambda: self._shared == 0)
-        try:
-            yield
-        finally:
-            with self._cond:
-                self._exclusive = False
-                self._cond.notify_all()
 
 
 #: Hard cap on rows a single ``/query`` response will buffer on the driver.
@@ -114,7 +77,6 @@ class KsqlRestServer:
     ):
         self.ctx = ctx
         self.max_rows = max_rows
-        self._lock = _SharedLock()
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -140,8 +102,7 @@ class KsqlRestServer:
                         stmt = payload.strip()
                         if stmt.startswith("{"):
                             stmt = json.loads(stmt)["ksql"]
-                        with outer._lock.exclusive():
-                            df = outer.ctx.execute(payload)
+                        df = outer.ctx.execute(payload)
                         cols = df.columns if df is not None else []
                         self._reply(200, [{
                             "statementText": stmt,
@@ -149,13 +110,12 @@ class KsqlRestServer:
                             "columns": cols,
                         }])
                     elif self.path == "/query":
+                        df = outer.ctx.execute(payload)
                         cap = outer.max_rows
                         # limit(cap+1) pushes the bound into the Spark plan
                         # (CollectLimit) — the driver never materializes
                         # more than cap+1 rows no matter the view's size.
-                        with outer._lock.shared():
-                            df = outer.ctx.execute(payload)
-                            collected = df.limit(cap + 1).collect()
+                        collected = df.limit(cap + 1).collect()
                         rows = [
                             {"row": {"columns": list(r)}}
                             for r in collected[:cap]

@@ -1820,3 +1820,28 @@ def test_ctas_stays_lazy_over_streaming_or_nondeterministic_plans(
         assert probe_values("probe_det") == {"old"}
     finally:
         ctx.stop_all()
+
+
+def test_ctas_with_time_functions_stays_lazy(spark):
+    """Spark calls current_timestamp() deterministic, but its value moves
+    between pulls, so a CTAS using it is not pinned: each pull
+    re-evaluates it."""
+    import time
+
+    ctx = KsqlContext(spark)
+    ctx.register_topic("clock_topic", spark.range(4))
+    ctx.execute(
+        "CREATE STREAM clock_s (id BIGINT) WITH (KAFKA_TOPIC='clock_topic', "
+        "VALUE_FORMAT='JSON');"
+    )
+    ctx.execute(
+        "CREATE TABLE clock_t AS SELECT id % 2 AS k, "
+        "MAX(current_timestamp()) AS t FROM clock_s GROUP BY id % 2;"
+    )
+
+    def stamp():
+        return ctx.execute("SELECT t FROM clock_t;").first().t
+
+    first = stamp()
+    time.sleep(0.05)
+    assert stamp() > first

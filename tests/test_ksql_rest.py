@@ -4,7 +4,9 @@ engine's ksql-compatible endpoints (reference: ci_cd/Makefile:112-127 drives
 
 from __future__ import annotations
 
+import gc
 import json
+import time
 import urllib.request
 
 import pytest
@@ -163,8 +165,27 @@ def _flow_table(df) -> dict:
     return {r[0]: (r[1], r[2]) for r in df.collect()}
 
 
+def _collect_garbage(spark) -> None:
+    """A Python and a JVM collection, so Spark's ContextCleaner finds the
+    pins that nothing reads any more."""
+    gc.collect()
+    spark._jvm.System.gc()
+
+
 def _stored_rdds(spark) -> set[int]:
     return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _new_stored_rdds(spark, before: set[int], settle_to: int) -> set[int]:
+    """The RDDs stored since ``before``, once garbage collection has
+    brought them down to ``settle_to`` (or 30 s have passed)."""
+    deadline = time.monotonic() + 30
+    while True:
+        new = _stored_rdds(spark) - before
+        if len(new) <= settle_to or time.monotonic() > deadline:
+            return new
+        _collect_garbage(spark)
+        time.sleep(0.1)
 
 
 class _FileFlow:
@@ -203,8 +224,8 @@ def test_pinned_table_is_never_stale_nor_served_to_other_plans(spark, tmp_path):
     a fresh flow and a second context over the same directory see it (a
     persist()-based pin would plan-match the second context's CTAS and
     serve it the old counts); the table itself keeps its DDL-time state
-    until both payloads are re-issued; re-issues hold one live pin and
-    stop_all releases it."""
+    until both payloads are re-issued; re-issues leave one live pin once
+    the released ones are collected, and none is left after stop_all."""
     from m12_kafkastreams_python_azure_spark.flow import reference_flow_batch
 
     d = tmp_path / "ingest"
@@ -236,16 +257,16 @@ def test_pinned_table_is_never_stale_nor_served_to_other_plans(spark, tmp_path):
         for _ in range(3):
             flow.register()
             assert flow.pull() == new
-            assert len(_stored_rdds(spark) - before) == 1
+            assert len(_new_stored_rdds(spark, before, 1)) == 1
     finally:
         flow.close()
-    assert not _stored_rdds(spark) - before
+    assert not _new_stored_rdds(spark, before, 0)
 
 
 def test_concurrent_pulls_survive_reissued_ddl(spark, tmp_path):
     """Pull threads (more than cores) hammer /query while the write path
     lands files and re-issues both payloads: every pull succeeds and
-    returns the table as of one of the DDLs, never a released pin."""
+    returns the table as of one of the DDLs."""
     import sys
     import threading
 
@@ -289,24 +310,62 @@ def test_concurrent_pulls_survive_reissued_ddl(spark, tmp_path):
     assert all(r in states for r in results)
 
 
-def test_statement_waits_for_in_flight_queries():
-    """A /ksql statement takes the server lock alone and /query requests
-    share it, so re-issued DDL never releases a pin under a pull."""
-    import threading
+def test_reissued_pin_keeps_its_readers(spark, tmp_path):
+    """Re-issuing a pinned table's DDL, here POSTed to /query, drops the
+    context's hold on the old pin but not its readers': a lazy
+    table-table join with a streaming source table, a TOPK table, a
+    derived stream and a held DataFrame over the old pin still return
+    their rows after garbage collection."""
+    from tests.test_ksql import USERS_DDL, _land_users, _users_stream
 
-    from m12_kafkastreams_python_azure_spark.ksql_rest import _SharedLock
+    d = tmp_path / "users"
+    d.mkdir()
+    _land_users(d, "p0.json", [(0, "a", 1), (1, "b", 1)])
+    ctx = KsqlContext(spark)
+    server = KsqlRestServer(ctx)
+    nums = (
+        "CREATE STREAM nums (id BIGINT) WITH (KAFKA_TOPIC='nums_topic', "
+        "VALUE_FORMAT='JSON');"
+    )
+    by_k = (
+        "CREATE TABLE by_k AS SELECT id % 3 AS k, COUNT(*) AS n FROM nums "
+        "GROUP BY id % 3;"
+    )
+    readers = {
+        "joined": "CREATE TABLE joined AS SELECT b.k AS k, b.n AS n, "
+        "u.v AS v FROM by_k b JOIN users_rt u ON b.k = u.k;",
+        "top": "CREATE TABLE top AS SELECT k, TOPK(n, 2) AS tn FROM by_k "
+        "GROUP BY k;",
+        "derived": "CREATE STREAM derived AS SELECT k, n FROM by_k;",
+    }
 
-    lock = _SharedLock()
-    ran = []
+    def rows(table: str) -> list:
+        status, out = _post(server, "/query", f"SELECT * FROM {table};")
+        assert status == 200, out
+        return sorted(r["row"]["columns"] for r in out)
 
-    def statement() -> None:
-        with lock.exclusive():
-            ran.append("ddl")
+    try:
+        ctx.register_topic("nums_topic", spark.range(6))
+        ctx.execute(nums)
+        _users_stream(spark, ctx, d)
+        ctx.execute(USERS_DDL)
+        ctx.execute(by_k)
+        assert "by_k" in ctx._materialized
+        for stmt in readers.values():
+            ctx.execute(stmt)
+        held = ctx.execute("SELECT k, n FROM by_k;")
+        want = {t: rows(t) for t in readers}
+        assert want["joined"] == [[0, 2, "a"], [1, 2, "b"]]
 
-    with lock.shared(), lock.shared():  # queries run side by side
-        t = threading.Thread(target=statement)
-        t.start()
-        t.join(0.3)
-        assert t.is_alive() and not ran
-    t.join(10)
-    assert not t.is_alive() and ran == ["ddl"]
+        ctx.register_topic("nums_topic", spark.range(9))
+        ctx.execute(nums)
+        status, out = _post(server, "/query", by_k)
+        assert status == 200, out
+        assert rows("by_k") == [[0, 3], [1, 3], [2, 3]]
+        _collect_garbage(spark)
+        time.sleep(0.5)
+        assert {t: rows(t) for t in readers} == want
+        assert sorted(tuple(r) for r in held.collect()) == [(0, 2), (1, 2), (2, 2)]
+    finally:
+        ctx.stop_all()
+        server.close()
