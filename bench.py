@@ -5,8 +5,15 @@ Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {"q": sec, ...}, "sf": <sf>}
 
-Each query is materialized via a count-style collect (aggregates collect
-fully; wide row sets are counted) after a warm-up of the input scans.
+One run rule for every headline query: each run starts cold (the
+CacheManager cleared and the pin registry released, so no run reuses an
+intermediate pinned by an earlier run), and the clock covers the query's
+construction plus ``count()`` on the result. Construction is timed
+because operators may run eager work there (pins with count barriers,
+driver-looped merges). A query's time is the best of 3 to 6 such runs.
+
+``run_headline(spark, entry.queries(), names)`` times any subset of
+queries with the same rule.
 """
 
 from __future__ import annotations
@@ -18,16 +25,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# A 40+-query session accumulates broadcast/shuffle/codegen state; the
-# r20-era formula sized the heap at a quarter of RAM capped at 24g to
-# keep the tail out of GC trouble. Measured this round (r21, local[32],
-# sf0.1): the BIG heap is itself the noise source — the same 9-query
-# window ran 66.5 s wall at 24g vs 35.1 s at 8g, and the heavy near-dup
-# block 356 s at 24g vs 263 s at 12g, with strictly better
-# run-convergence at the smaller heap (large Eden = long young-GC pauses
-# that land on random runs and defeat the 4% convergence gate). 12g is
-# the floor of that sweep with safety margin for the sf1 tier; override
-# via SPARK_DRIVER_MEM.
+# A 40+-query session accumulates broadcast/shuffle/codegen state, but a
+# BIG heap is itself a noise source: measured at local[32], sf0.1, the
+# same 9-query window ran 66.5 s wall at 24g vs 35.1 s at 8g, and the
+# heavy near-dup block 356 s at 24g vs 263 s at 12g, with better
+# run-convergence at the smaller heap (a large Eden means long young-GC
+# pauses that land on random runs). The default is an eighth of physical
+# RAM clamped to 4g..12g: 4g on any box under 40 GB (a 15 GB box gets
+# 4g), 12g from 96 GB up. Override via SPARK_DRIVER_MEM.
 try:
     _phys_gb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) >> 30
 except (ValueError, OSError):
@@ -44,13 +49,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: Suite wall-clock budget (VERDICT r20 #1: the official 32-core r20 run
 #: exited rc 124 — TIMED OUT with no parseable line — because the
 #: worst-case harness multipliers compound under machine noise: up to 6
-#: convergence runs per query x 122 queries, a full-window hedge re-run,
-#: and min5/max10 streaming replays. An unparsed line costs ALL numbers,
-#: so bounding the worst case beats measuring a little more precisely).
+#: convergence runs per query x 122 queries and min5/max10 streaming
+#: replays. An unparsed line costs ALL numbers, so bounding the worst
+#: case beats measuring a little more precisely).
 #: The budget degrades MEASUREMENT EXTRAS only — every query still runs
 #: its 3-run minimum and every section still executes; what gets dropped
-#: (extension runs past 3, the hedge re-run, streaming replays past the
-#: minimum) is recorded in the sidecar under ``budget``.
+#: (extension runs past 3, streaming replays past the minimum) is
+#: recorded in the sidecar under ``budget``.
 BENCH_BUDGET_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "2700"))
 
 #: monotonic suite start, set by main() (and by the streaming child from
@@ -66,15 +71,14 @@ def _budget_spent_frac() -> float:
         return 0.0
     return (time.perf_counter() - _SUITE_T0) / BENCH_BUDGET_SEC
 
-#: Measurement-regime tag (VERDICT r18 #2), stamped into every bench
-#: artifact. "fit-outside-clock-v2" = streaming replay processors (and
-#: their fit-once bloom/model/rate artifacts) are PRE-BUILT before the
-#: timed region starts — the regime r18 restored after ADVICE r17 #1
-#: found r17 had construction inside the clock. Bump this string
-#: whenever the timed-region contract changes; the ratio tables refuse
-#: to compare across regimes (a machine-readable guard replacing the
-#: "compare streaming rows to r16/r18, not r17" ROADMAP note).
-BENCH_REGIME = "fit-outside-clock-v2"
+#: Measurement-regime tag, stamped into every bench artifact: timings
+#: from different regimes are not comparable. "cold-construction-v3" =
+#: every headline run starts with no pins and times construction +
+#: count() (v2 kept run 1's pins for runs 2+ and timed count() alone for
+#: most queries); streaming replay processors (and their fit-once
+#: artifacts) stay PRE-BUILT before the timed region, as in v2. Bump this
+#: string whenever the timed-region contract changes.
+BENCH_REGIME = "cold-construction-v3"
 
 # Headline set: the flagship reference query + the scan/join/agg/window
 # breadth + the training-data-pipeline operators.
@@ -233,61 +237,28 @@ HEADLINE = [
     "ksql_histogram",
 ]
 
-# Driver-looped queries whose work runs at CONSTRUCTION time (the loop
-# collects per-iteration winners, so the returned DataFrame is just the
-# result table): time construction + count, not count alone — timing only
-# count() would measure a createDataFrame of a driver-side list (~0 s).
-# containment_near_dup / excerpt_screen also run eager work at
-# construction (the collapsed-reps persist + materialization barrier) —
-# timing count() alone would exclude the collapse shuffle.
-EAGER_QUERIES = {
-    "bpe_train",
-    "containment_near_dup",
-    "excerpt_screen",
-    # round 20: the near-dup operators gained construction-time
-    # materialization barriers (persist + count) that stop concurrently-
-    # launched consumer stages racing the cache-write and re-running the
-    # signature/collapse pass per subtree (OPTIMIZATION_r20.md). The
-    # barrier moves that work to construction, so construction must be
-    # inside the clock — r19 timed the same total work lazily via
-    # count(), so the rows stay cross-round comparable.
-    "minhash_near_dup",
-    "simhash_near_dup",
-    "embedding_near_dup_lsh",
-    "phash_near_dup",
-    "video_near_dup",
-    "audio_near_dup",
-    # winnow_pairs runs the collapse persist + count barrier at
-    # construction (the containment discipline)
-    "winnow_pairs",
-    # round 21: source_overlap pins its distinct (source, gram) table at
-    # construction (persist + count — the gram explode previously ran
-    # twice, single-task), and cdc_chunk_dedup pins its chunking pass
-    # (one md5 per token n-gram, previously executed twice). Same
-    # accounting rule as the r20 additions: construction inside the
-    # clock covers the same total work r19 timed lazily via count().
-    "source_overlap",
-    "cdc_chunk_dedup",
-    # the composed screen->verify front door and its consumer run the
-    # collapse AND candidate persists (two count barriers) eagerly
-    "containment_screened",
-    "subsumption_prune",
-    # the ksql CTAS is pinned at DDL time (ksql pin rule: batch,
-    # deterministic, immutable leaves), so construction runs the
-    # aggregate; ksql_topk / ksql_topk_distinct stay lazy views — their
-    # pre-prune reads spark_partition_id(), which is non-deterministic
-    "ksql_histogram",
-}
+
+def cold_run(spark, build, sf_dir: str) -> float:
+    """One timed run under the bench's rule: drop every pin first (the
+    CacheManager and the pin registry), then time ``build(spark, sf_dir)``
+    and ``count()`` on its result together. count() materializes the
+    full plan; for top-k/agg queries the result is tiny, for wide ones
+    it avoids driver transfer cost."""
+    spark.catalog.clearCache()
+    release_parallel_caches()
+    t0 = time.perf_counter()
+    build(spark, sf_dir).count()
+    return time.perf_counter() - t0
 
 
 def run_headline(spark, queries, names, sf_dir=None):
-    """Time each named query (best of three runs), with per-query fault
-    isolation: one broken query must never zero out the whole bench
-    artifact — its error is recorded and the rest keep running.
-    Returns (timings, errors, runmeta); runmeta[name] = {"n_runs",
-    "converged"} so an UNCONVERGED min (two fastest still >4% apart
-    after 6 runs) is distinguishable in the sidecar from a converged
-    one when comparing rounds (ADVICE r13)."""
+    """Time each named query (best of 3 to 6 ``cold_run``s), with
+    per-query fault isolation: one broken query must never zero out the
+    whole bench artifact — its error is recorded and the rest keep
+    running. Returns (timings, errors, runmeta); runmeta[name] =
+    {"n_runs", "converged"} so an UNCONVERGED min (two fastest still >4%
+    apart after 6 runs) is distinguishable in the sidecar from a
+    converged one (ADVICE r13)."""
     sf_dir = sf_dir or SF_DIR
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
@@ -308,20 +279,11 @@ def run_headline(spark, queries, names, sf_dir=None):
         # fastest runs agree within 4% — a converged min is evidence the
         # noise floor was actually reached, where a fixed N is not. Stable
         # queries still stop at 3; only the noisy ones pay extra runs.
-        # count() materializes the full plan; for top-k/agg queries the
-        # result is tiny, for wide ones we avoid driver transfer cost.
         runs: list[float] = []
         converged = False
         try:
             while len(runs) < 6:
-                if name in EAGER_QUERIES:
-                    t0 = time.perf_counter()
-                    df = queries[name](spark, sf_dir)
-                else:
-                    df = queries[name](spark, sf_dir)
-                    t0 = time.perf_counter()
-                df.count()
-                runs.append(time.perf_counter() - t0)
+                runs.append(cold_run(spark, queries[name], sf_dir))
                 best = min(runs)
                 if len(runs) >= 3:
                     s = sorted(runs)
@@ -357,12 +319,10 @@ def run_headline(spark, queries, names, sf_dir=None):
             if best != float("inf"):
                 timings[name] = round(best, 3)
                 runmeta[name] = {"n_runs": len(runs), "converged": False}
-        # operators that persist intermediates would otherwise accumulate
-        # cache across the suite and skew later queries via memory pressure
-        # (clearCache drops DF-level cache; release_parallel_caches frees
-        # the dedup/LSH persist registry, which clearCache does not track)
-        spark.catalog.clearCache()
-        release_parallel_caches()
+    # the last run's pins would otherwise hold memory through whatever
+    # runs next (the streaming sections)
+    spark.catalog.clearCache()
+    release_parallel_caches()
     return timings, errors, runmeta
 
 
@@ -395,40 +355,6 @@ def converged_best(run_fn, min_runs: int = 2, max_runs: int = 4, tag: str = ""):
                 ).append(tag or "unnamed")
                 break
     return min(runs), {"n_runs": len(runs), "converged": converged}
-
-
-def _n_unconverged(runmeta: dict) -> int:
-    return sum(1 for m in runmeta.values() if not m["converged"])
-
-
-def hedge_needed(runmeta: dict) -> bool:
-    """VERDICT r16 #2 trigger: MORE THAN A THIRD of the window's rows
-    exited unconverged — evidence of a machine-state-elevated window
-    (the r16 class: 36/86 unconverged, ~13% uniform drift), not of any
-    single noisy query."""
-    return bool(runmeta) and _n_unconverged(runmeta) * 3 > len(runmeta)
-
-
-def pick_hedged_window(first, second):
-    """Choose the committed window between the original run and the
-    hedge re-run: fewer errors wins, then fewer unconverged rows, then
-    the lower total (min-estimates-true-cost, the run_headline law).
-    Each argument is a (timings, errors, runmeta) triple; returns
-    (chosen_triple, hedge_record)."""
-    (t1, e1, m1), (t2, e2, m2) = first, second
-    pick_second = (len(e2), _n_unconverged(m2), sum(t2.values())) < (
-        len(e1), _n_unconverged(m1), sum(t1.values())
-    )
-    hedge = {
-        "triggered": True,
-        "rows": len(m1),
-        "unconverged_first": _n_unconverged(m1),
-        "unconverged_second": _n_unconverged(m2),
-        "total_first": round(sum(t1.values()), 3),
-        "total_second": round(sum(t2.values()), 3),
-        "chosen": "second" if pick_second else "first",
-    }
-    return (second if pick_second else first), hedge
 
 
 def main() -> None:
@@ -466,48 +392,6 @@ def main() -> None:
     names = [n for n in HEADLINE if n not in exclude]
 
     timings, errors, runmeta = run_headline(spark, queries, names)
-
-    # Mechanical noisy-window hedge (VERDICT r16 #2): r16 committed a
-    # known-elevated sf0.1 artifact (36/86 rows unconverged, ~13% uniform
-    # machine-state drift) with the honest number living only in SCALE.md
-    # prose. The rule is now code, not judgment: if MORE THAN A THIRD of
-    # the window's rows exit unconverged, the whole window re-runs once
-    # and the better run (fewer errors, then fewer unconverged rows, then
-    # lower total) becomes the committed artifact. Both runs' summaries
-    # are recorded in the sidecar either way.
-    if hedge_needed(runmeta) and _budget_spent_frac() > 0.30:
-        # budget guard (VERDICT r20 #1): the hedge DOUBLES the window, and
-        # a window noisy enough to trigger it usually also ran long — on
-        # the r20 sandbox that compound is exactly what pushed the official
-        # 32-core run past its timeout (rc 124, no line printed). If the
-        # first window already consumed >30% of the suite budget, skip the
-        # re-run and flag the artifact instead: a flagged-noisy line beats
-        # no line.
-        hedge = {
-            "triggered": False,
-            "skipped_for_budget": True,
-            "unconverged_first": _n_unconverged(runmeta),
-            "rows": len(runmeta),
-        }
-        _BUDGET_DEGRADED["hedge_skipped"] = True
-    elif hedge_needed(runmeta):
-        print(
-            f"[bench] window hedge TRIGGERED "
-            f"({_n_unconverged(runmeta)}/{len(runmeta)} unconverged) — "
-            "re-running the whole headline window once",
-            file=sys.stderr,
-            flush=True,
-        )
-        second = run_headline(spark, queries, names)
-        (timings, errors, runmeta), hedge = pick_hedged_window(
-            (timings, errors, runmeta), second
-        )
-    else:
-        hedge = {
-            "triggered": False,
-            "unconverged_first": _n_unconverged(runmeta),
-            "rows": len(runmeta),
-        }
 
     def _mark(section: str) -> None:
         print(f"[bench] section: {section}", file=sys.stderr, flush=True)
@@ -547,7 +431,7 @@ def main() -> None:
         sf_val = sf
     # The PRINTED line stays COMPACT — metric/value/sf/streaming +
     # per-query seconds only. The r06 line also carried methodology +
-    # a 51-query vs_baseline payload and outgrew the driver's
+    # a 51-query ratio payload and outgrew the driver's
     # tail-capture buffer, so the official BENCH_r06.json recorded
     # `parsed: null`. Everything beyond the compact core goes to a
     # SIDECAR file next to this script (bench_sidecar_sf{sf}.json,
@@ -602,13 +486,10 @@ def main() -> None:
     # figure in the artifact) — unconditional, unlike the per-query map,
     # because round-over-round streaming comparisons hinge on them.
     sidecar["throughput_convergence"] = throughput_meta
-    # The hedge record is unconditional so every artifact self-describes
-    # whether the window was noisy and which run was committed.
-    sidecar["window_hedge"] = hedge
     # Budget record (VERDICT r20 #1): the suite wall budget and which
     # measurement extras it dropped this run (empty dict = none — the
-    # budget never drops queries or sections, only extension runs, the
-    # hedge re-run, and streaming replays past the minimum).
+    # budget never drops queries or sections, only extension runs and
+    # streaming replays past the minimum).
     sidecar["budget"] = {
         "budget_sec": BENCH_BUDGET_SEC,
         "spent_sec": round(time.perf_counter() - _SUITE_T0, 1)
@@ -636,14 +517,13 @@ def main() -> None:
     # delta was a methodology change — cold caches between queries —
     # not a regression, and cost a review cycle to attribute).
     sidecar["methodology"] = {
-        "batch": "best-of-3-to-6 runs per query (min, not median — "
-                 "contention noise is additive): 3 runs minimum, then "
-                 "extra runs until the two fastest agree within 4% or 6 "
-                 "total — a converged min, not a fixed sample, is what "
-                 "collapses the +-7% identical-code band r11/r12 "
-                 "measured; caches cleared between queries (clearCache "
-                 "+ persist-registry release) so no query rides an "
-                 "earlier query's cache",
+        "batch": "one rule for every query: each run starts cold "
+                 "(clearCache + pin-registry release, so no run reuses "
+                 "an intermediate pinned by an earlier run) and times "
+                 "construction + df.count() together; best-of-3-to-6 "
+                 "runs per query (min, not median — contention noise is "
+                 "additive): 3 runs minimum, then extra runs until the "
+                 "two fastest agree within 4% or 6 total",
         "streaming": "1 untimed warm-up replay, then CONVERGED-MIN timed "
                      "replays (two fastest within 4%, min 5 / max 10), "
                      "fresh checkpoint each; source split into 32 "
@@ -656,7 +536,6 @@ def main() -> None:
                      "n_runs/converged in throughput_convergence",
         "warmup": "one flagship query + one mapInPandas no-op before "
                   "timing (JIT + Python-worker spin-up)",
-        "materialization": "df.count() per run",
         "ann_pq_ivfpq": "index training (k-means codebooks / coarse "
                         "centroids) is memoized per corpus fingerprint and "
                         "charged as an offline build — per-query times "
@@ -667,12 +546,11 @@ def main() -> None:
                               "and saves it (offline-build cost, amortized "
                               "by best-of-3); timed runs measure "
                               "load+probe+vote — the real user lifecycle",
-        "bpe_train": "16-merge driver-looped training run; construction "
-                     "is timed (EAGER_QUERIES) because the sequential "
-                     "merge loop runs at construction — wall/16 is the "
-                     "per-merge cost; per-merge work is vocab-sized "
-                     "(word-count collapse up front), so it should be "
-                     "~flat across SF tiers",
+        "bpe_train": "16-merge driver-looped training run; the "
+                     "sequential merge loop runs at construction — "
+                     "wall/16 is the per-merge cost; per-merge work is "
+                     "vocab-sized (word-count collapse up front), so it "
+                     "should be ~flat across SF tiers",
         "keep_best_stream": "documents replayed as 4 micro-batches "
                             "through keep_best_batch_processor (fresh "
                             "state dirs): one half-corpus 2-batch warm-up "
@@ -696,33 +574,10 @@ def main() -> None:
                             "replays per timing sample to clear the "
                             "timer noise floor (replays_per_sample in "
                             "throughput_convergence)",
-        "window_hedge": "if >1/3 of the headline window's rows exit "
-                        "unconverged, the whole window re-runs once and "
-                        "the better run (fewer errors, then fewer "
-                        "unconverged rows, then lower total) is the "
-                        "committed artifact — both summaries recorded "
-                        "under window_hedge (VERDICT r16 #2)",
-        "converged_ratios_vs_prev": "per-query this/prev ratio vs the "
-                                    "previous round's committed artifact "
-                                    "for the same tier, rows converged in "
-                                    "BOTH runs only — cross-round claims "
-                                    "read this table, never the noisy "
-                                    "totals (VERDICT r17 #6); prev_round "
-                                    "is recorded and byte-identical "
-                                    "(self-copy) candidates are skipped "
-                                    "(ADVICE r18 #4)",
         "regime": "every artifact stamps the measurement regime "
-                  f"({BENCH_REGIME!r}); vs_baseline and "
-                  "converged_ratios_vs_prev REFUSE to ratio across "
-                  "different regimes (VERDICT r18 #2 — the r17 "
-                  "streaming-comparison foot-gun, now machine-enforced)",
+                  f"({BENCH_REGIME!r}); timings from different regimes "
+                  "are not comparable",
     }
-    deltas = _baseline_deltas(timings, streaming_eps)
-    if deltas:
-        sidecar["vs_baseline"] = deltas
-    ratios = _converged_ratios_vs_prev(timings, runmeta, sf_val)
-    if ratios:
-        sidecar["converged_ratios_vs_prev"] = ratios
     sidecar_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
         f"bench_sidecar_sf{sf_val}.json",
@@ -782,180 +637,6 @@ def _compact_line(out: dict, budget: int = _LINE_BUDGET) -> str:
     cand["queries"] = "see sidecar"
     cand.pop("queries_fast", None)
     return json.dumps(cand, separators=(",", ":"))
-
-
-def _converged_ratios_vs_prev(
-    timings: dict, runmeta: dict, sf_val, here: str | None = None
-) -> dict | None:
-    """Per-query ratio table vs the PREVIOUS round's committed artifact
-    for the same SF tier, restricted to rows converged in BOTH runs
-    (VERDICT r17 #6: two consecutive elevated sf1 windows showed that
-    cross-round sf1 claims must not depend on noisy TOTALS — the
-    converged per-query ratios are the comparable record). The previous
-    artifact is the highest-round ``bench_sf{tag}_r{N}.json`` committed
-    next to this script whose round is ALREADY CLOSED (round N is
-    closed once ``CORRECTNESS_r{N}.json`` exists) — without the cap, a
-    mid-round re-run would pick the CURRENT round's just-committed
-    artifact and self-compare at ratio ~1.0 while claiming to be the
-    cross-round table (r18 review finding #7). Two further guards
-    (ADVICE r18 #4 / VERDICT r18 #2): a candidate whose per-query
-    timings are IDENTICAL to this run's is this run's own committed
-    copy (a post-close re-run) and is skipped for the next-lower round;
-    the compared round is recorded as ``prev_round`` so a ~1.0
-    self-compare against a same-HEAD artifact is detectable by
-    inspection; and a candidate stamped with a DIFFERENT measurement
-    regime refuses the whole table rather than ratio across regimes.
-    Override the artifact with $SPARK_GRAFT_PREV_BENCH (same regime
-    refusal applies — an explicit path does not make cross-regime
-    numbers comparable)."""
-    import glob
-    import re as _re
-
-    here = here or os.path.dirname(os.path.abspath(__file__))
-    cur_q3 = {k: round(v, 3) for k, v in timings.items()}
-
-    def _load(p):
-        try:
-            with open(p) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            return None
-
-    prev = prev_path = prev_round = None
-    env_path = os.environ.get("SPARK_GRAFT_PREV_BENCH")
-    if env_path:
-        prev, prev_path = _load(env_path), env_path
-        m = _re.search(r"_r(\d+)\.json$", env_path)
-        prev_round = int(m.group(1)) if m else None
-    else:
-        tag = {0.1: "sf01", 1.0: "sf1"}.get(sf_val)
-        if tag is None:
-            return None
-        closed = [
-            int(m.group(1))
-            for p in glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
-            if (m := _re.search(r"_r(\d+)\.json$", p))
-        ]
-        cap = max(closed) if closed else 0
-        cands = []
-        for p in glob.glob(os.path.join(here, f"bench_{tag}_r*.json")):
-            m = _re.search(r"_r(\d+)\.json$", p)
-            if m and int(m.group(1)) <= cap:
-                cands.append((int(m.group(1)), p))
-        for rnd, p in sorted(cands, reverse=True):
-            cand = _load(p)
-            if cand is None:
-                continue
-            cq = cand.get("queries")
-            if isinstance(cq, dict) and cq == cur_q3:
-                # byte-identical per-query timings: this run's own
-                # committed artifact (post-close re-run) — not a
-                # cross-round comparison; fall to the next round down
-                continue
-            prev, prev_path, prev_round = cand, p, rnd
-            break
-    if prev is None:
-        return None
-    prev_regime = prev.get("regime")
-    if prev_regime is not None and prev_regime != BENCH_REGIME:
-        return {
-            "prev_artifact": os.path.basename(prev_path),
-            "prev_round": prev_round,
-            "refused": (
-                f"regime mismatch: prev {prev_regime!r} != current "
-                f"{BENCH_REGIME!r} — cross-regime timings are not "
-                "comparable (VERDICT r18 #2)"
-            ),
-        }
-    prev_q = prev.get("queries")
-    if not isinstance(prev_q, dict):
-        return None
-    # run_convergence lists ONLY unconverged / slow-to-converge rows —
-    # absence means converged-by-3
-    prev_conv = prev.get("run_convergence", {})
-    ratios = {}
-    for nm, t in timings.items():
-        pt = prev_q.get(nm)
-        if not pt:
-            continue
-        cur_ok = runmeta.get(nm, {}).get("converged", False)
-        prev_ok = prev_conv.get(nm, {}).get("converged", True)
-        if cur_ok and prev_ok:
-            ratios[nm] = round(t / pt, 3)
-    if not ratios:
-        return None
-    import statistics
-
-    return {
-        "prev_artifact": os.path.basename(prev_path),
-        "prev_round": prev_round,
-        "n": len(ratios),
-        "median": round(statistics.median(ratios.values()), 3),
-        "ratios": ratios,
-    }
-
-
-def _baseline_deltas(
-    timings: dict, streaming_eps, path: str | None = None
-) -> dict | None:
-    """Per-query ratios vs the committed baseline artifact
-    (bench_baseline.json — the last driver-recorded run), so each bench
-    line carries its own round-over-round diff: ratio > 1 is slower than
-    baseline, < 1 faster. Queries absent from the baseline are listed
-    under 'new'.
-
-    Regime guard (VERDICT r18 #2): a baseline stamped with a DIFFERENT
-    measurement regime refuses the comparison outright. The committed
-    r05 baseline predates regime tags; its BATCH per-query timings are
-    regime-independent (the regime governs the streaming timed region
-    only), so an UNTAGGED baseline keeps its batch ratios but the
-    streaming ratio is withheld unless the regimes provably match."""
-    path = path or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_baseline.json"
-    )
-    if not os.path.exists(path):
-        return None
-    try:
-        with open(path) as fh:
-            base = json.load(fh)
-    except (OSError, ValueError):
-        return None
-    base_regime = base.get("regime")
-    if base_regime is not None and base_regime != BENCH_REGIME:
-        return {
-            "label": base.get("label", "baseline"),
-            "refused": (
-                f"regime mismatch: baseline {base_regime!r} != current "
-                f"{BENCH_REGIME!r} — cross-regime ratios are not "
-                "comparable (VERDICT r18 #2)"
-            ),
-        }
-    bq = base.get("queries", {})
-    ratios = {
-        k: round(v / bq[k], 2)
-        for k, v in timings.items()
-        if k in bq and bq[k] and bq[k] > 0
-    }
-    common = [k for k in timings if k in bq]
-    out: dict = {
-        "label": base.get("label", "baseline"),
-        "common_total_ratio": round(
-            sum(timings[k] for k in common) / max(sum(bq[k] for k in common), 1e-9), 3
-        ) if common else None,
-        "per_query_ratio": ratios,
-        "new": sorted(k for k in timings if k not in bq),
-    }
-    bs = base.get("streaming_events_per_sec")
-    if bs and streaming_eps:
-        if base_regime == BENCH_REGIME:
-            out["streaming_ratio"] = round(streaming_eps / bs, 3)
-        else:
-            out["streaming_ratio_refused"] = (
-                "baseline carries no regime tag (predates "
-                f"{BENCH_REGIME!r}); streaming rows are regime-sensitive "
-                "(ADVICE r17 #1) — batch ratios above remain valid"
-            )
-    return out
 
 
 _STREAM_CHILD_MARKER = "BENCH_STREAM_CHILD_JSON: "

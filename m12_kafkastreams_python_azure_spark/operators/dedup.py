@@ -326,14 +326,6 @@ def collapse_exact_groups(
     unpersist the pin mid-query — the LSH front doors release FIRST and
     pass ``_fresh=False`` inward.
 
-    BENCH COUPLING (ADVICE r20 #3): the pin's count() is an eager Spark
-    job at CONSTRUCTION time, so any bench.py HEADLINE entry that
-    transitively constructs a pinning operator must be listed in
-    ``bench.EAGER_QUERIES`` (timed from construction) or the collapse
-    work silently runs outside the clock. Every current front door
-    (minhash/simhash/embedding LSH, banded-Hamming multimodal callers,
-    containment/winnow/screened family) is listed.
-
     NOTE: without ``pin``, ``mapping`` is returned LAZY — callers that
     run a cache-releasing pipeline between collapse and expansion must
     persist it AFTER that pipeline materializes, or accept the
@@ -734,8 +726,7 @@ def containment_pairs(
     a Spark job (persist + count materialization barrier) when this
     function is CALLED, not when the returned DataFrame is acted on —
     callers that only build/explain the plan still pay the collapse
-    shuffle, and bench.py therefore times this operator in
-    EAGER_QUERIES (construction + count)."""
+    shuffle."""
     from ..sources.readers import register_parallel_cache
 
     # Persist the collapsed reps: the gram table has TWO consumers (the
@@ -1133,8 +1124,7 @@ def containment_screened(
     the recall at 1x/10x/100x.
 
     Inherits the duplicate law and eager construction: exact duplicates
-    collapse ONCE (shared by both tiers), persisted with a count barrier
-    — bench times this in EAGER_QUERIES.
+    collapse ONCE (shared by both tiers), persisted with a count barrier.
 
     Reference parity note: the reference app has no near-dup surface at
     all (SURVEY.md §2) — this extends the training-data-pipeline tier."""
@@ -1993,10 +1983,11 @@ def banded_hamming_pairs(
     that already collapsed upstream (simhash's text collapse) pass
     False."""
     if collapse_identical:
-        # release FIRST (ADVICE r20 #2 — match the documented front-door
-        # discipline; the only external collapse_identical caller, phash,
-        # registers nothing beforehand), then PIN the collapse window
-        # output (r20): the expression tree under it is the caller's
+        # PIN the collapse window output (r20); the caller's front door
+        # owns the pin registry and releases it before building ``sigs``
+        # (``multimodal.phash_near_dup``), as the minhash/simhash front
+        # doors do — releasing here would unpersist every pin the caller
+        # holds. The expression tree under the pin is the caller's
         # signature pass — for multimodal callers a mapInPandas
         # decode+hash of every payload — plus the full shuffle+sort of
         # the 16-byte signature rows. The validity filter, the banded rep
@@ -2010,7 +2001,6 @@ def banded_hamming_pairs(
         # table — 24-byte cached rows — and a narrow pin would re-run the
         # Python signature pass to rebuild reps, the very cost the pin
         # deletes (phash measured 3.8 s -> 2.8 s with the full pin, r21).
-        release_parallel_caches()
         mapping, reps = collapse_exact_groups(sigs, ["sim"], "id", pin=True)
         rep_pairs = banded_hamming_pairs(
             reps, max_hamming, bands, max_bucket, collapse_identical=False

@@ -431,8 +431,11 @@ def phash_near_dup(
     keepers with ``graph.dedup_keep_best`` — same downstream as text."""
     from m12_kafkastreams_python_azure_spark.operators.dedup import (
         banded_hamming_pairs,
+        release_parallel_caches,
     )
 
+    # front door: release FIRST, then the banded path pins its collapse
+    release_parallel_caches()
     sigs = image_dhash(media).select(
         F.col("media_id").alias("id"), F.col("dhash64").alias("sim")
     )

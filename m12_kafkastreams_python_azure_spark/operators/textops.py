@@ -890,9 +890,9 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bench/driver surface for the full BPE training loop: 16 merges on
     the documents corpus, returned as the merge table. EAGER by nature —
     BPE's merges are sequential, so the driver loop runs at CONSTRUCTION
-    time and bench.py times construction + count for this entry
-    (``EAGER_QUERIES``); wall/16 is the per-merge cost a tokenizer team
-    sizes their 50k-merge run with. Rows-only in the driver contract (no
+    time (bench.py times construction + count for every entry); wall/16
+    is the per-merge cost a tokenizer team sizes their 50k-merge run
+    with. Rows-only in the driver contract (no
     single SQL statement expresses an N-deep sequential merge); bounded
     by the oracle-checked unrolled ``bpe_merges`` and the pure-Python
     reference pin in tests/test_round9_ops.py."""
@@ -1227,7 +1227,7 @@ def winnow_pairs(
     Inherits the whole containment discipline: exact duplicates
     collapse to their min-id representative before fingerprinting (the
     engine's duplicate law — this IS a bucketed candidate generator;
-    EAGER at construction, bench times it in EAGER_QUERIES), ubiquitous
+    EAGER at construction), ubiquitous
     fingerprint hashes (df > ``max_df``) are dropped from candidate
     generation AND the size denominators via a broadcast anti-join, and
     the pair expansion is bucket-local (``dedup.bucket_pairs``; the df

@@ -1,7 +1,8 @@
 """Per-stage wall/metric attribution for named queries.
 
-Runs each query with the bench's methodology (warm-up + 2 timed runs,
-caches cleared between queries) in a session with the event log enabled,
+Runs each query with the bench's run rule (warm-up, then 2 runs of
+``bench.cold_run``: pins dropped before each run, construction + count()
+timed) in a session with the event log enabled,
 then parses the log into a per-query, per-stage table:
 
   stage wall (completion - submission), task count, executorRunTime sum,
@@ -17,16 +18,13 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
 from m12_kafkastreams_python_azure_spark.session import get_spark  # noqa: E402
-from m12_kafkastreams_python_azure_spark.sources.readers import (  # noqa: E402
-    release_parallel_caches,
-)
+from perfbench.stats import read_event_log  # noqa: E402
 
 EVDIR = "/tmp/spark-events-profile"
 
@@ -57,93 +55,67 @@ def run(names: list[str]) -> None:
     for name in names:
         for run_i in range(2):
             spark.sparkContext.setJobDescription(f"Q:{name}:run{run_i}")
-            if name in bench.EAGER_QUERIES:
-                t0 = time.perf_counter()
-                df = queries[name](spark, bench.SF_DIR)
-            else:
-                df = queries[name](spark, bench.SF_DIR)
-                t0 = time.perf_counter()
-            df.count()
-            walls.setdefault(name, []).append(time.perf_counter() - t0)
+            walls.setdefault(name, []).append(
+                bench.cold_run(spark, queries[name], bench.SF_DIR)
+            )
             spark.sparkContext.setJobDescription(None)
-            spark.catalog.clearCache()
-            release_parallel_caches()
     spark.stop()
 
-    # ---- parse the event log (plain file, or Spark 4 rolling dir) ----
-    logf = []
-    for f in os.listdir(EVDIR):
-        p = os.path.join(EVDIR, f)
-        if f.startswith("."):
-            continue
-        if os.path.isdir(p):
-            logf.extend(
-                os.path.join(p, g)
-                for g in os.listdir(p)
-                if g.startswith("events_")
-            )
-        else:
-            logf.append(p)
-    assert logf, f"no event log files under {EVDIR}"
+    # ---- parse the event log ----
     job_desc: dict[int, str] = {}
     job_stages: dict[int, list[int]] = {}
     stages: dict[int, dict] = {}
     stage_tasks: dict[int, dict] = {}
 
-    def _events():
-        # aggregate over every collected log file (ADVICE r20 #4: a
-        # rolling event-log dir legitimately holds several events_ files)
-        for lp in sorted(logf):
-            with open(lp) as fh:
-                for line in fh:
-                    yield json.loads(line)
-
-    for ev in _events():
-            t = ev.get("Event")
-            if t == "SparkListenerJobStart":
-                jid = ev["Job ID"]
-                job_desc[jid] = ev.get("Properties", {}).get(
-                    "spark.job.description", ""
-                )
-                job_stages[jid] = [s["Stage ID"] for s in ev["Stage Infos"]]
-            elif t == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                sid = si["Stage ID"]
-                sub = si.get("Submission Time")
-                comp = si.get("Completion Time")
-                scopes = []
-                for rdd in si.get("RDD Info", []):
-                    sc = rdd.get("Scope")
-                    if sc:
-                        try:
-                            nm = json.loads(sc).get("name", "")
-                        except ValueError:
-                            nm = ""
-                        if nm and nm not in scopes:
-                            scopes.append(nm)
-                stages[sid] = {
-                    "name": " | ".join(scopes[:8]) or si["Stage Name"].split("\n")[0][:60],
-                    "wall_ms": (comp - sub) if sub and comp else None,
-                    "n_tasks": si["Number of Tasks"],
-                }
-            elif t == "SparkListenerTaskEnd":
-                sid = ev["Stage ID"]
-                m = ev.get("Task Metrics") or {}
-                agg = stage_tasks.setdefault(
-                    sid,
-                    {"run_ms": 0, "sh_read": 0, "sh_write": 0, "input": 0,
-                     "gc_ms": 0},
-                )
-                agg["run_ms"] += m.get("Executor Run Time", 0)
-                agg["gc_ms"] += m.get("JVM GC Time", 0)
-                sr = m.get("Shuffle Read Metrics", {})
-                agg["sh_read"] += sr.get("Remote Bytes Read", 0) + sr.get(
-                    "Local Bytes Read", 0
-                )
-                agg["sh_write"] += m.get("Shuffle Write Metrics", {}).get(
-                    "Shuffle Bytes Written", 0
-                )
-                agg["input"] += m.get("Input Metrics", {}).get("Bytes Read", 0)
+    events = read_event_log(EVDIR)
+    if not events:
+        raise SystemExit(f"no event log under {EVDIR}")
+    for ev in events:
+        t = ev.get("Event")
+        if t == "SparkListenerJobStart":
+            jid = ev["Job ID"]
+            job_desc[jid] = ev.get("Properties", {}).get(
+                "spark.job.description", ""
+            )
+            job_stages[jid] = [s["Stage ID"] for s in ev["Stage Infos"]]
+        elif t == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            sid = si["Stage ID"]
+            sub = si.get("Submission Time")
+            comp = si.get("Completion Time")
+            scopes = []
+            for rdd in si.get("RDD Info", []):
+                sc = rdd.get("Scope")
+                if sc:
+                    try:
+                        nm = json.loads(sc).get("name", "")
+                    except ValueError:
+                        nm = ""
+                    if nm and nm not in scopes:
+                        scopes.append(nm)
+            stages[sid] = {
+                "name": " | ".join(scopes[:8]) or si["Stage Name"].split("\n")[0][:60],
+                "wall_ms": (comp - sub) if sub and comp else None,
+                "n_tasks": si["Number of Tasks"],
+            }
+        elif t == "SparkListenerTaskEnd":
+            sid = ev["Stage ID"]
+            m = ev.get("Task Metrics") or {}
+            agg = stage_tasks.setdefault(
+                sid,
+                {"run_ms": 0, "sh_read": 0, "sh_write": 0, "input": 0,
+                 "gc_ms": 0},
+            )
+            agg["run_ms"] += m.get("Executor Run Time", 0)
+            agg["gc_ms"] += m.get("JVM GC Time", 0)
+            sr = m.get("Shuffle Read Metrics", {})
+            agg["sh_read"] += sr.get("Remote Bytes Read", 0) + sr.get(
+                "Local Bytes Read", 0
+            )
+            agg["sh_write"] += m.get("Shuffle Write Metrics", {}).get(
+                "Shuffle Bytes Written", 0
+            )
+            agg["input"] += m.get("Input Metrics", {}).get("Bytes Read", 0)
 
     # group stage rows under their query (run1 only — run0 pays cold costs)
     by_query: dict[str, list] = {}

@@ -3,12 +3,18 @@
 Rounds 3 and 4 produced empty BENCH artifacts (rc=1, no timings) because
 one query's AnalysisException aborted the whole process. The contract
 now: a failing query is recorded under ``errors`` and every other query
-still gets a timing.
+still gets a timing. The file also pins the one run rule: every run
+starts with no pins and the clock covers construction + count().
 """
 
 from __future__ import annotations
 
+import time
+
 import bench
+from m12_kafkastreams_python_azure_spark.sources.readers import (
+    register_parallel_cache,
+)
 
 
 def _ok_query(spark, sf_dir):
@@ -85,3 +91,35 @@ def test_runmeta_records_convergence(spark):
         assert 3 <= m["n_runs"] <= 6
     else:
         assert m["n_runs"] == 6
+
+
+def test_every_run_starts_with_no_pins(spark):
+    """Each timed run is cold: a query that pins at construction finds
+    the CacheManager empty on EVERY run, not only the first — runs 2+
+    must not plan-match run 1's pins."""
+
+    def _pinning(s, sf_dir):
+        assert s._jsparkSession.sharedState().cacheManager().isEmpty()
+        df = register_parallel_cache(s.range(100).persist())
+        df.count()
+        return df
+
+    timings, errors, meta = bench.run_headline(
+        spark, {"pin": _pinning}, ["pin"], sf_dir="unused"
+    )
+    assert errors == {}
+    assert "pin" in timings and meta["pin"]["n_runs"] >= 3
+
+
+def test_construction_is_inside_the_clock(spark):
+    """Work a query does while it is built (pins with count barriers,
+    driver-looped merges) is timed like the final count()."""
+
+    def _slow_build(s, sf_dir):
+        time.sleep(0.2)
+        return s.range(10)
+
+    timings, errors, _meta = bench.run_headline(
+        spark, {"slow": _slow_build}, ["slow"], sf_dir="unused"
+    )
+    assert errors == {} and timings["slow"] >= 0.2

@@ -158,142 +158,3 @@ def test_fresh_jvm_streaming_falls_back_in_suite(monkeypatch):
     for v in meta.values():
         assert v["fresh_jvm"] is False
         assert "OSError" in v["fresh_jvm_fallback_reason"]
-
-
-# ---------------------------------------------------------------- window hedge
-
-def _meta(n_conv, n_unconv):
-    m = {f"q{i}": {"n_runs": 3, "converged": True} for i in range(n_conv)}
-    m.update(
-        {f"u{i}": {"n_runs": 6, "converged": False} for i in range(n_unconv)}
-    )
-    return m
-
-
-def test_hedge_trigger_is_strictly_more_than_a_third():
-    assert not bench.hedge_needed({})
-    assert not bench.hedge_needed(_meta(2, 1))      # exactly 1/3: no
-    assert bench.hedge_needed(_meta(5, 3))          # 3/8 > 1/3: yes
-    assert bench.hedge_needed(_meta(50, 36))        # the r16 window shape
-    assert not bench.hedge_needed(_meta(60, 26))    # 26/86 under the bar
-
-
-def test_hedge_prefers_fewer_errors_then_convergence_then_total():
-    conv = ({"a": 1.0}, {}, _meta(5, 0))
-    noisy = ({"a": 0.5}, {}, _meta(2, 3))
-    errored = ({"a": 0.4}, {"b": "boom"}, _meta(5, 0))
-
-    chosen, rec = bench.pick_hedged_window(noisy, conv)
-    assert chosen is conv and rec["chosen"] == "second"
-    chosen, rec = bench.pick_hedged_window(conv, noisy)
-    assert chosen is conv and rec["chosen"] == "first"
-    # an error-free window beats a faster, better-converged errored one
-    chosen, rec = bench.pick_hedged_window(noisy, errored)
-    assert chosen is noisy and rec["chosen"] == "first"
-    # equal errors + equal convergence -> lower total wins
-    fast = ({"a": 0.5}, {}, _meta(5, 0))
-    slow = ({"a": 0.9}, {}, _meta(5, 0))
-    chosen, rec = bench.pick_hedged_window(slow, fast)
-    assert chosen is fast and rec["chosen"] == "second"
-    assert rec["triggered"] and rec["total_second"] == 0.5
-
-
-# ----------------------------------------------- regime tag (VERDICT r18 #2)
-
-
-def _write(path, payload):
-    with open(path, "w") as fh:
-        json.dump(payload, fh)
-
-
-def test_baseline_deltas_refuse_cross_regime(tmp_path):
-    base = tmp_path / "bench_baseline.json"
-    _write(
-        base,
-        {
-            "label": "r05",
-            "regime": "some-older-regime",
-            "queries": {"a": 1.0},
-            "streaming_events_per_sec": 100.0,
-        },
-    )
-    out = bench._baseline_deltas({"a": 0.5}, 200.0, path=str(base))
-    assert out["refused"].startswith("regime mismatch")
-    assert "per_query_ratio" not in out
-
-
-def test_baseline_deltas_untagged_keeps_batch_drops_streaming(tmp_path):
-    """The committed r05 baseline predates regime tags: its batch
-    ratios stay (the regime governs the streaming timed region only)
-    but the streaming ratio is withheld with a recorded reason."""
-    base = tmp_path / "bench_baseline.json"
-    _write(
-        base,
-        {
-            "label": "r05",
-            "queries": {"a": 1.0},
-            "streaming_events_per_sec": 100.0,
-        },
-    )
-    out = bench._baseline_deltas({"a": 0.5}, 200.0, path=str(base))
-    assert out["per_query_ratio"] == {"a": 0.5}
-    assert "streaming_ratio" not in out
-    assert "regime" in out["streaming_ratio_refused"]
-
-
-def test_baseline_deltas_same_regime_keeps_streaming_ratio(tmp_path):
-    base = tmp_path / "bench_baseline.json"
-    _write(
-        base,
-        {
-            "label": "now",
-            "regime": bench.BENCH_REGIME,
-            "queries": {"a": 1.0},
-            "streaming_events_per_sec": 100.0,
-        },
-    )
-    out = bench._baseline_deltas({"a": 0.5}, 200.0, path=str(base))
-    assert out["streaming_ratio"] == 2.0
-
-
-def test_ratios_vs_prev_refuse_cross_regime(tmp_path, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_PREV_BENCH", raising=False)
-    _write(tmp_path / "CORRECTNESS_r07.json", {})
-    _write(
-        tmp_path / "bench_sf01_r07.json",
-        {"regime": "older-regime", "queries": {"a": 1.0}},
-    )
-    out = bench._converged_ratios_vs_prev(
-        {"a": 0.5}, {"a": {"converged": True}}, 0.1, here=str(tmp_path)
-    )
-    assert out["prev_round"] == 7
-    assert "regime mismatch" in out["refused"]
-    assert "ratios" not in out
-
-
-def test_ratios_vs_prev_skip_byte_identical_self_copy(tmp_path, monkeypatch):
-    """ADVICE r18 #4: after the round closes, a re-run must not compare
-    against its own just-committed artifact — byte-identical per-query
-    timings skip to the next round down, and prev_round is recorded."""
-    monkeypatch.delenv("SPARK_GRAFT_PREV_BENCH", raising=False)
-    _write(tmp_path / "CORRECTNESS_r08.json", {})
-    timings = {"a": 0.512, "b": 1.204}
-    # r08 committed artifact == this run's own timings (self copy)
-    _write(
-        tmp_path / "bench_sf01_r08.json",
-        {"regime": bench.BENCH_REGIME,
-         "queries": {k: round(v, 3) for k, v in timings.items()}},
-    )
-    _write(
-        tmp_path / "bench_sf01_r07.json",
-        {"regime": bench.BENCH_REGIME, "queries": {"a": 1.0, "b": 1.0}},
-    )
-    out = bench._converged_ratios_vs_prev(
-        timings,
-        {"a": {"converged": True}, "b": {"converged": True}},
-        0.1,
-        here=str(tmp_path),
-    )
-    assert out["prev_artifact"] == "bench_sf01_r07.json"
-    assert out["prev_round"] == 7
-    assert out["ratios"] == {"a": 0.512, "b": 1.204}

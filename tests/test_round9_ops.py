@@ -537,3 +537,23 @@ def test_banded_hamming_collapse_matches_uncollapsed(spark):
     assert a == b
     # 4+3 dup family fully connected: C(4,2)+C(3,2)+4*3 = 6+3+12 = 21 pairs
     assert len(a) == 21
+
+
+def test_banded_hamming_collapse_keeps_callers_pins(spark):
+    """The collapse pins its own window but leaves the caller's pins
+    alone: releasing the registry is the front door's job
+    (``multimodal.phash_near_dup``), not the shared core's."""
+    from m12_kafkastreams_python_azure_spark.operators.dedup import (
+        banded_hamming_pairs,
+    )
+    from m12_kafkastreams_python_azure_spark.sources.readers import (
+        register_parallel_cache,
+    )
+
+    mine = register_parallel_cache(spark.range(50).persist())
+    mine.count()
+    sigs = spark.createDataFrame(
+        [(i, i % 3) for i in range(12)], "id long, sim long"
+    )
+    assert banded_hamming_pairs(sigs, collapse_identical=True).count() > 0
+    assert mine.storageLevel.useMemory
