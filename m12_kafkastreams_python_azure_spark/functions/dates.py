@@ -67,13 +67,6 @@ def stay_category(duration_days: Column) -> Column:
     )
 
 
-def stay_category_from_strings(check_in: Column | str, check_out: Column | str) -> Column:
-    """Full F3->F4->F5 stack from raw string date columns."""
-    ci = parse_date_lenient(check_in)
-    co = parse_date_lenient(check_out)
-    return stay_category(stay_duration_days(ci, co))
-
-
 # The exact CASE expression as ANSI SQL, parameterized on a duration
 # expression — single source of truth shared by Spark SQL and the DuckDB
 # oracle so both sides bucket identically.

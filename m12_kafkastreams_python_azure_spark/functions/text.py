@@ -123,9 +123,3 @@ def doc_fingerprint(text: Column | str) -> Column:
 
 def doc_fingerprint_sql(expr: str) -> str:
     return f"md5({expr})"
-
-
-def fingerprint_bucket(text: Column | str, buckets: int = 1024) -> Column:
-    """Stable small-int bucket from the fingerprint — the partitioning key a
-    100 TB dedup would shuffle on (uniform by construction)."""
-    return (F.conv(F.substring(doc_fingerprint(text), 1, 8), 16, 10).cast("long") % buckets)

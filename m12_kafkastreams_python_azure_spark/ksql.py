@@ -305,22 +305,6 @@ _WINDOW_GRACE_RE = re.compile(
 _LITERAL_RE = re.compile(r"'(?:[^']|'')*'")
 
 
-_UNIT_SECONDS = {
-    "millisecond": 0.001,
-    "second": 1.0,
-    "minute": 60.0,
-    "hour": 3600.0,
-    "day": 86400.0,
-}
-
-
-def _duration_seconds(n: str, unit: str) -> float:
-    """ksql duration (e.g. '10', 'MINUTES') in seconds; unknown units
-    map conservatively high so a comparison never shortens a delay."""
-    u = unit.lower().rstrip("s")
-    return float(n) * _UNIT_SECONDS.get(u, 86400.0)
-
-
 def _mask(sql: str) -> str:
     """Length-preserving literal mask: every single-quoted literal's body
     becomes 'xxx…', so regex spans found on the mask index straight into

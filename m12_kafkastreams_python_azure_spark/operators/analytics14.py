@@ -59,10 +59,6 @@ Q8_REGION = "ASIA"
 Q8_TYPE = "ECONOMY"
 
 
-def _revenue() -> F.Column:
-    return F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-
-
 def _revenue_dec() -> F.Column:
     """DECIMAL-exact revenue term (the region_revenue pattern,
     analytics.py): the fixture's money columns are 2/4-decimal closed,

@@ -10,6 +10,8 @@ contain a CartesianProduct or BroadcastNestedLoopJoin.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -91,7 +93,6 @@ def embedding_near_dup_lsh(
     bands: int = 8,
     max_bucket: int = 2000,
     collapse_exact: bool = True,
-    _fresh: bool = True,
 ) -> DataFrame:
     """Banded sign-LSH near-dup pairs with exact-cosine verification.
 
@@ -121,46 +122,22 @@ def embedding_near_dup_lsh(
     rows broadcast; larger candidate sets fall to a shuffled join —
     VERDICT r18 #3, same discipline as the containment verify).
     """
-    if collapse_exact:
-        # release FIRST, then pin the collapse NARROW (the minhash rule,
-        # r21): the window — a full shuffle+sort of the vector table —
-        # previously re-executed in every downstream subtree (the rep
-        # pipeline, the validity filter, the self-sim projection and each
-        # of the three expansion branches; the r20 stage profile showed a
-        # 75 s-executor-time stage that was exactly this). The r20 cut
-        # pinned the FULL window output (vectors included) and measured
-        # 2x slower at same cores; pin="narrow" caches only the 16-byte
-        # (_m_id, _rep_id) mapping — one window execution — and rebuilds
-        # reps as a scan + broadcast semi-join. The inner pipeline gets
-        # _fresh=False so its own release does not unpersist the pin.
-        _dedup.release_parallel_caches()
-        mapping, reps = _dedup.collapse_exact_groups(
-            df, [vec_col], id_col, pin="narrow"
-        )
-        rep_pairs = embedding_near_dup_lsh(
-            reps, threshold, id_col, vec_col, dim, planes_per_band, bands,
-            max_bucket, collapse_exact=False, _fresh=False,
-        )
-        # parity with the uncollapsed path, which never emits NULL- or
-        # zero-norm-vector pairs (NULL sign-bits generate no band rows; a
-        # zero norm makes the verify sim NULL via try_divide): exclude
-        # those GROUPS from the expansion. Evaluated once per DISTINCT
-        # vector on the reps — not as a corpus-wide pre-filter (see the
-        # simhash collapse note). rep_pairs needs no filter: zero-norm
-        # pairs never survive its own cosine verify.
-        valid = reps.filter(
-            F.coalesce(l2_norm(F.col(vec_col)) > 0, F.lit(False))
-        ).select(F.col(id_col).alias("_rep_id"))
-        # no persist: mapping and valid are cheap projections over the
-        # pinned window cache — the three expansion branches re-read the
-        # cache, never re-run the window
-        mapping = mapping.join(valid, "_rep_id")
-        self_sim = reps.select(
+    _dedup.release_parallel_caches()
+    pairs = partial(
+        _lsh_pairs, threshold=threshold, id_col=id_col, vec_col=vec_col,
+        dim=dim, planes_per_band=planes_per_band, bands=bands,
+        max_bucket=max_bucket,
+    )
+    if not collapse_exact:
+        return pairs(df)
+
+    def self_sim(reps: DataFrame) -> DataFrame:
+        # try_divide: reps include zero-norm rows (their groups are left
+        # out of the expansion, but the projection evaluates per rep
+        # before the join prunes) — NULL here instead of an ANSI
+        # divide-by-zero; no NULL ever reaches the output
+        return reps.select(
             F.col(id_col).alias("_rep_id"),
-            # try_divide: reps now include zero-norm rows (their groups are
-            # filtered OUT of mapping above, but the projection evaluates
-            # per rep before the join prunes) — NULL here instead of an
-            # ANSI divide-by-zero; no NULL ever reaches the output
             F.round(
                 F.try_divide(
                     dot_product(F.col(vec_col), F.col(vec_col)),
@@ -169,14 +146,25 @@ def embedding_near_dup_lsh(
                 6,
             ).alias("sim"),
         )
-        return _dedup.expand_collapsed_pairs(
-            rep_pairs, mapping, "sim", self_sim, max_bucket
-        )
-    # free the previous invocation's cached intermediates (same bounded-
-    # cache discipline as the text-dedup helpers); _fresh=False when the
-    # collapse path above already released and holds the pinned window
-    if _fresh:
-        _dedup.release_parallel_caches()
+
+    # narrow pin (the r20 full-width pin, vectors included, measured 2x
+    # slower at same cores). The uncollapsed path never emits NULL- or
+    # zero-norm-vector pairs (NULL sign-bits generate no band rows; a zero
+    # norm makes the verify sim NULL via try_divide), so only reps with a
+    # positive norm are valid.
+    return _dedup.collapsed_pairs(
+        df, [vec_col], id_col, "narrow", pairs, "sim", self_sim,
+        valid=F.coalesce(l2_norm(F.col(vec_col)) > 0, F.lit(False)),
+        max_bucket=max_bucket,
+    )
+
+
+def _lsh_pairs(
+    df: DataFrame, threshold: float, id_col: str, vec_col: str, dim: int,
+    planes_per_band: int, bands: int, max_bucket: int,
+) -> DataFrame:
+    """``embedding_near_dup_lsh``' banded sign-LSH + verify body over its
+    input as given (no collapse)."""
     base = (
         df.select(
             F.col(id_col).alias("id"),
@@ -204,26 +192,8 @@ def embedding_near_dup_lsh(
         ).alias("band", "bh"),
     )
 
-    # Pre-agg repartition on the bucket key: the groupBy reuses the
-    # exchange (no extra shuffle), and AQE keeps a user-specified
-    # partition count — so the O(|bucket|^2) pair expansion in the
-    # post-agg stage stays bucket-parallel instead of collapsing onto one
-    # task when the shuffled bytes are small.
-    cands = (
-        banded.repartition(_dedup.expansion_partitions(df), "band", "bh")
-        .groupBy("band", "bh")
-        .agg(F.collect_list("id").alias("ids"))
-        .filter(F.size("ids") > 1)
-        # degenerate-bucket guard with linear star overflow (dedup.star_pairs)
-        .select(
-            F.explode(
-                F.when(
-                    F.size("ids") <= max_bucket,
-                    _dedup.bucket_pairs(F.col("ids")),
-                ).otherwise(_dedup.star_pairs(F.col("ids")))
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
+    cands = _dedup.bucket_candidates(
+        banded, _dedup.expansion_partitions(df), max_bucket
     )
     # NOTE: candidate pairs are NOT deduped here — a pair colliding in
     # several bands is verified more than once, which is cheaper than

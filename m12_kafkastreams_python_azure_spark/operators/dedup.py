@@ -22,6 +22,9 @@ is O(n * k) hashing + one shuffle of (band_hash -> doc) pairs.
 
 from __future__ import annotations
 
+from functools import partial
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -238,9 +241,39 @@ def expansion_partitions(df: DataFrame) -> int:
     return max(8, df.sparkSession.sparkContext.defaultParallelism // 4)
 
 
-#: Back-compat private aliases (public names above are canonical).
-_expansion_partitions = expansion_partitions
-_bucket_pairs = bucket_pairs
+def bucket_or_star(ids: Column, max_bucket: int) -> Column:
+    """``bucket_pairs`` for a bucket of at most ``max_bucket`` ids, else
+    the linear ``star_pairs`` overflow: a degenerate bucket (boilerplate
+    or near-constant inputs) would pin one task on a quadratic
+    expansion, while the star keeps its cluster connected and
+    verifiable."""
+    return F.when(F.size(ids) <= max_bucket, bucket_pairs(ids)).otherwise(
+        star_pairs(ids)
+    )
+
+
+def bucket_candidates(
+    banded: DataFrame, n_parts: int, max_bucket: int
+) -> DataFrame:
+    """Candidate pairs ``(id_a, id_b)`` from LSH band rows ``(id, band,
+    bh)``: every pair of ids sharing a (band, bh) bucket, expanded
+    bucket-locally (``bucket_or_star``). A pair colliding in several
+    bands appears once per shared band; callers dedupe where it pays.
+
+    The explicit pre-agg repartition on the bucket key does double duty:
+    the groupBy reuses the exchange (no extra shuffle — collect_list has
+    no map-side reduction to lose), and AQE does not coalesce a
+    user-specified repartition, so the O(|bucket|^2) pair expansion in
+    the post-agg stage stays bucket-parallel instead of collapsing onto
+    one task when the shuffled bytes are small."""
+    return (
+        banded.repartition(n_parts, "band", "bh")
+        .groupBy("band", "bh")
+        .agg(F.collect_list("id").alias("ids"))
+        .filter(F.size("ids") > 1)
+        .select(F.explode(bucket_or_star(F.col("ids"), max_bucket)).alias("p"))
+        .select("p.id_a", "p.id_b")
+    )
 
 
 # ------------------------------------------------- exact-collapse pre-pass
@@ -267,6 +300,20 @@ def collapse_reps_only(docs: DataFrame) -> DataFrame:
         .select("doc_id", "text")
     )
 
+
+def pinned_collapse_reps(docs: DataFrame) -> DataFrame:
+    """``collapse_reps_only`` over ``docs``' (doc_id, text), persisted and
+    count-barriered: the containment-family callers feed the reps to
+    more than one consumer (the hot-gram aggregate and the rare
+    anti-join, or a detector plus its keep-list base), and Spark shares
+    no subtrees across join branches, so unpinned the collapse shuffle
+    re-runs per consumer (measured: +2 s at sf0.1). EAGER: the count
+    runs a Spark job when this is called."""
+    reps = register_parallel_cache(
+        collapse_reps_only(docs.select("doc_id", "text")).persist()
+    )
+    reps.count()
+    return reps
 
 
 def collapse_exact_groups(
@@ -320,16 +367,8 @@ def collapse_exact_groups(
       payload-width window output is never cached. Requires ``id_col``
       values to be unique (every caller's ids are primary keys).
 
-    Callers that pin MUST own the cache registry for the rest of the
-    query: any nested pipeline that calls ``release_parallel_caches()``
-    after this point (``_parallel_text`` with ``fresh=True``) would
-    unpersist the pin mid-query — the LSH front doors release FIRST and
-    pass ``_fresh=False`` inward.
-
-    NOTE: without ``pin``, ``mapping`` is returned LAZY — callers that
-    run a cache-releasing pipeline between collapse and expansion must
-    persist it AFTER that pipeline materializes, or accept the
-    recompute."""
+    Without ``pin`` both outputs are lazy: callers that only need
+    ``reps`` once (mining, curation) pay no barrier."""
     digest = F.xxhash64(*[F.col(c) for c in key_cols])
     w = Window.partitionBy(digest, *key_cols)
     tagged = df.withColumn("_rep_id", F.min(F.col(id_col)).over(w))
@@ -390,12 +429,7 @@ def expand_collapsed_pairs(
         .filter(F.size("ids") > 1)
     )
     expanded = groups.select(
-        "_rep_id",
-        F.explode(
-            F.when(F.size("ids") <= max_bucket, bucket_pairs(F.col("ids"))).otherwise(
-                star_pairs(F.col("ids"))
-            )
-        ).alias("p"),
+        "_rep_id", F.explode(bucket_or_star(F.col("ids"), max_bucket)).alias("p")
     )
     if isinstance(self_metric, DataFrame):
         within = expanded.join(self_metric, "_rep_id").select(
@@ -408,9 +442,45 @@ def expand_collapsed_pairs(
     return cross.unionByName(within)
 
 
-def _parallel_text(
-    df: DataFrame, text_col: str, id_col: str, fresh: bool = True
+def collapsed_pairs(
+    df: DataFrame, key_cols: list[str], id_col: str, pin: str,
+    pair_fn: Callable[[DataFrame], DataFrame], metric_col: str,
+    self_metric: Column | Callable[[DataFrame], DataFrame],
+    valid: Column | None = None, max_bucket: int = 1000,
 ) -> DataFrame:
+    """The exact-collapse path every near-dup family shares: collapse
+    byte-identical ``key_cols`` to their min-id representative
+    (``collapse_exact_groups`` with ``pin``), run the family's
+    ``pair_fn`` over the reps only, and expand the verified rep pairs
+    back to all members (``expand_collapsed_pairs``) — so near-dup cost
+    is a function of DISTINCT content, and every exact-duplicate pair is
+    emitted by construction instead of depending on a band collision.
+
+    ``self_metric``: the within-group metric, a constant Column or a
+    function of the reps returning (_rep_id, <metric_col>).
+    ``valid``: a predicate over a rep row; groups whose rep fails it are
+    left out of the expansion, for parity with the uncollapsed path,
+    whose verify drops pairs with a NULL or degenerate signature. It is
+    evaluated once per DISTINCT input on the reps, never as a
+    corpus-wide pre-filter (a corpus-wide simhash pre-filter measured
+    ~5x on the whole query at sf0.1). ``rep_pairs`` need no filter:
+    such pairs never survive the family's own verify."""
+    mapping, reps = collapse_exact_groups(df, key_cols, id_col, pin=pin)
+    rep_pairs = pair_fn(reps)
+    if valid is not None:
+        # no persist: a projection over the pinned collapse — the three
+        # expansion branches re-read the pin, never re-run the window
+        mapping = mapping.join(
+            reps.filter(valid).select(F.col(id_col).alias("_rep_id")), "_rep_id"
+        )
+    if not isinstance(self_metric, Column):
+        self_metric = self_metric(reps)
+    return expand_collapsed_pairs(
+        rep_pairs, mapping, metric_col, self_metric, max_bucket
+    )
+
+
+def _parallel_text(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, t) spread over all cores WITH a materialization barrier.
 
     A bare ``repartition(n)`` is NOT enough when the input is one small
@@ -421,14 +491,6 @@ def _parallel_text(
     At real scale the scan has thousands of splits and this is a no-op
     round-robin plus a cheap cache of (id, text).
     """
-    # Bound cache growth: each new dedup invocation frees the previous
-    # one's intermediates (callers needing tighter control can call
-    # release_parallel_caches() right after their terminal action).
-    # ``fresh=False`` skips the release: the caller already released and
-    # holds a PINNED cache this query still needs (collapse_exact_groups
-    # pin=True) — releasing here would unpersist it mid-query.
-    if fresh:
-        release_parallel_caches()
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     out = (
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
@@ -446,13 +508,12 @@ def _parallel_text(
 
 
 def _parallel_shingles(
-    df: DataFrame, text_col: str, id_col: str, shingle_n: int,
-    fresh: bool = True,
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int
 ) -> DataFrame:
     """Shingle sets computed in parallel (see ``_parallel_text``), cached
     for reuse by the signature pass and both verify-join sides."""
     out = (
-        _parallel_text(df, text_col, id_col, fresh=fresh)
+        _parallel_text(df, text_col, id_col)
         .select("id", shingles(F.col("t"), shingle_n).alias("sh"))
         .filter(F.size("sh") > 0)
         .persist()
@@ -472,7 +533,6 @@ def minhash_near_dup_pairs(
     jaccard_threshold: float = 0.6,
     max_bucket: int = 1000,
     collapse_exact: bool = True,
-    _fresh: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs with exact-Jaccard verification.
 
@@ -498,35 +558,34 @@ def minhash_near_dup_pairs(
     Shuffle profile: one exchange on band_hash (uniform — it's a hash),
     one on the pair ids for verification. No cross product anywhere.
     """
-    if collapse_exact:
-        # no parity pre-filter needed: ``shingles`` always yields >= 1
-        # element (short/NULL docs get the full-join single shingle), so
-        # the uncollapsed path's size(sh) > 0 filter never drops a doc —
-        # identical NULL/short texts legitimately pair at Jaccard 1.0 in
-        # BOTH paths (pinned in test_dedup_scale)
-        # release FIRST, then pin the collapse NARROW (r21): the window —
-        # a full shuffle+sort of the raw text — previously re-executed in
-        # every downstream subtree (the rep pipeline and each of the three
-        # expansion branches, racing when launched together). The r20 cut
-        # pinned the FULL window output (raw text included) and measured
-        # 2.8x SLOWER at same cores than no pin; pin="narrow" caches only
-        # the 16-byte (_m_id, _rep_id) mapping — one window execution —
-        # and rebuilds reps as a scan + broadcast semi-join. The inner
-        # pipeline gets _fresh=False so its _parallel_text does not
-        # unpersist the pin.
-        release_parallel_caches()
-        mapping, reps = collapse_exact_groups(
-            df, [text_col], id_col, pin="narrow"
-        )
-        rep_pairs = minhash_near_dup_pairs(
-            reps, text_col, id_col, shingle_n, num_hashes, bands,
-            jaccard_threshold, max_bucket, collapse_exact=False, _fresh=False,
-        )
-        return expand_collapsed_pairs(
-            rep_pairs, mapping, "jaccard", F.lit(1.0), max_bucket
-        )
+    release_parallel_caches()
+    pairs = partial(
+        _minhash_pairs, text_col=text_col, id_col=id_col, shingle_n=shingle_n,
+        num_hashes=num_hashes, bands=bands,
+        jaccard_threshold=jaccard_threshold, max_bucket=max_bucket,
+    )
+    if not collapse_exact:
+        return pairs(df)
+    # narrow pin: the window's raw text is never cached (the r20 full pin
+    # measured 2.8x slower at same cores than no pin). No validity
+    # predicate: ``shingles`` always yields >= 1 element (short/NULL docs
+    # get the full-join single shingle), so the uncollapsed path's
+    # size(sh) > 0 filter never drops a doc — identical NULL/short texts
+    # pair at Jaccard 1.0 in BOTH paths (pinned in test_dedup_scale).
+    return collapsed_pairs(
+        df, [text_col], id_col, "narrow", pairs, "jaccard", F.lit(1.0),
+        max_bucket=max_bucket,
+    )
+
+
+def _minhash_pairs(
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int,
+    num_hashes: int, bands: int, jaccard_threshold: float, max_bucket: int,
+) -> DataFrame:
+    """``minhash_near_dup_pairs``' LSH + verify body over its input as
+    given (no collapse)."""
     rows_per_band = num_hashes // bands
-    base = _parallel_shingles(df, text_col, id_col, shingle_n, fresh=_fresh)
+    base = _parallel_shingles(df, text_col, id_col, shingle_n)
     # Hash every shingle string exactly once; signatures derive from the
     # long array (a named column, so it is single-evaluation).
     sig = (
@@ -555,32 +614,9 @@ def minhash_near_dup_pairs(
             )
         ).alias("bk"),
     ).select("id", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
-
-    # The explicit pre-agg repartition on the bucket key does double duty:
-    # the groupBy reuses the exchange (no extra shuffle — collect_list has
-    # no map-side reduction to lose), and AQE does not coalesce a
-    # user-specified repartition, so the O(|bucket|^2) pair expansion in
-    # the post-agg stage stays bucket-parallel instead of collapsing onto
-    # one task when the shuffled bytes are small.
-    cands = (
-        banded.repartition(expansion_partitions(df), "band", "bh")
-        .groupBy("band", "bh")
-        .agg(F.collect_list("id").alias("ids"))
-        .filter(F.size("ids") > 1)
-        # Mega-bucket guard: a bucket past max_bucket is degenerate banding
-        # (boilerplate / near-constant docs) and a quadratic expansion of it
-        # would pin a single task. Overflow path: star-expand (linear) so
-        # the cluster stays connected and verifiable instead of vanishing.
-        .select(
-            F.explode(
-                F.when(
-                    F.size("ids") <= max_bucket, bucket_pairs(F.col("ids"))
-                ).otherwise(star_pairs(F.col("ids")))
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cands = bucket_candidates(
+        banded, expansion_partitions(df), max_bucket
+    ).dropDuplicates(["id_a", "id_b"])
     # Verify stage touches only surviving candidate pairs. No broadcast
     # hint on purpose (same discipline as the embedding LSH front door,
     # api.embedding_near_dup_lsh): candidates are usually a tiny fraction
@@ -727,19 +763,9 @@ def containment_pairs(
     function is CALLED, not when the returned DataFrame is acted on —
     callers that only build/explain the plan still pay the collapse
     shuffle."""
-    from ..sources.readers import register_parallel_cache
-
-    # Persist the collapsed reps: the gram table has TWO consumers (the
-    # hot-gram aggregate and the rare anti-join) and Spark shares no
-    # subtrees across join branches, so without the pin the collapse
-    # shuffle would run twice (measured: +2 s at sf0.1). The count() is
-    # the materialization barrier (the parallel_scan discipline).
-    reps = register_parallel_cache(
-        collapse_reps_only(docs.select("doc_id", "text")).persist()
-    )
-    reps.count()
     return _exact_pairs_on_reps(
-        reps, n, threshold, max_df, expansion_partitions(docs)
+        pinned_collapse_reps(docs), n, threshold, max_df,
+        expansion_partitions(docs),
     )
 
 
@@ -1128,14 +1154,9 @@ def containment_screened(
 
     Reference parity note: the reference app has no near-dup surface at
     all (SURVEY.md §2) — this extends the training-data-pipeline tier."""
-    from ..sources.readers import register_parallel_cache
-
-    reps = register_parallel_cache(
-        collapse_reps_only(docs.select("doc_id", "text")).persist()
-    )
-    reps.count()
     return _screened_pairs_on_reps(
-        reps, n, threshold, max_df, screen_threshold, expansion_partitions(docs)
+        pinned_collapse_reps(docs), n, threshold, max_df, screen_threshold,
+        expansion_partitions(docs),
     )
 
 
@@ -1179,16 +1200,10 @@ def subsumption_prune(
     duplicates collapse to their representative first; pairs AMONG exact
     duplicates are exact-dedup's domain (``dedup_exact``). Output: the
     kept doc_ids (one column, ascending ids hash-stable)."""
-    from ..sources.readers import register_parallel_cache
-
     # ONE collapse, shared between the pair detector and the keep-list
     # base (ADVICE r16: the detectors' internal collapse was recomputed
-    # here — an extra full collapse shuffle per call). The persisted reps
-    # feed _exact_pairs_on_reps / _screened_pairs_on_reps directly.
-    reps = register_parallel_cache(
-        collapse_reps_only(docs.select("doc_id", "text")).persist()
-    )
-    reps.count()
+    # here — an extra full collapse shuffle per call).
+    reps = pinned_collapse_reps(docs)
     n_parts = expansion_partitions(docs)
     pairs = (
         _exact_pairs_on_reps(reps, n, threshold, max_df, n_parts)
@@ -1854,7 +1869,7 @@ def hamming64(a: Column, b: Column) -> Column:
 
 def _member_pairs(members: Column) -> Column:
     """Ordered (id, sim) pairs inside one simhash bucket — same bucket-local
-    expansion as ``_bucket_pairs`` but carrying the signatures along."""
+    expansion as ``bucket_pairs`` but carrying the signatures along."""
     m = F.array_sort(members)  # struct sort: by id first
     return F.flatten(
         F.transform(
@@ -1899,7 +1914,6 @@ def simhash_near_dup_pairs(
     bands: int = 4,
     max_bucket: int = 1000,
     collapse_exact: bool = True,
-    _fresh: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs: band the 64-bit simhash into ``bands``
     16-bit slices; by pigeonhole, any pair within Hamming distance <
@@ -1909,42 +1923,34 @@ def simhash_near_dup_pairs(
     ``collapse_exact`` (default on): identical texts collapse to one
     representative before banding and expand back afterwards at Hamming
     exactly 0 — see ``minhash_near_dup_pairs`` for the rationale."""
-    if collapse_exact:
-        # release + pin the collapse NARROW (the minhash rule, r21): one
-        # window execution materializes the 16-byte mapping cache; reps
-        # rebuild as a scan + broadcast semi-join (the r20 full-width pin
-        # measured 4x slower at same cores — raw text cached per query)
-        release_parallel_caches()
-        mapping, reps = collapse_exact_groups(
-            df, [text_col], id_col, pin="narrow"
-        )
-        rep_pairs = simhash_near_dup_pairs(
-            reps, text_col, id_col, max_hamming, bands, max_bucket,
-            collapse_exact=False, _fresh=False,
-        )
-        # parity with the uncollapsed path, where a NULL simhash yields a
-        # NULL hamming the verify filter drops: exclude those GROUPS from
-        # the expansion so their members don't re-enter as within-group
-        # pairs. simhash64 is NULL exactly when the TEXT is NULL (split of
-        # a trimmed empty string still yields one token), so the validity
-        # predicate is a plain IS NOT NULL — never re-run the 64-bit-vote
-        # expression as a filter (a corpus-wide simhash pre-filter
-        # measured ~5x on the whole query at sf0.1). rep_pairs needs no
-        # filter: NULL-signature pairs never survive its own verify.
-        valid = reps.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col).alias("_rep_id")
-        )
-        # no persist needed: mapping and valid are cheap projections over
-        # the PINNED window cache — the three expansion branches re-read
-        # the cache, never re-run the window
-        mapping = mapping.join(valid, "_rep_id")
-        return expand_collapsed_pairs(
-            rep_pairs, mapping, "hamming", F.lit(0), max_bucket
-        )
-    sigs = _parallel_text(df, text_col, id_col, fresh=_fresh).select(
+    release_parallel_caches()
+    pairs = partial(
+        _simhash_pairs, text_col=text_col, id_col=id_col,
+        max_hamming=max_hamming, bands=bands, max_bucket=max_bucket,
+    )
+    if not collapse_exact:
+        return pairs(df)
+    # narrow pin (the r20 full-width pin measured 4x slower at same
+    # cores). A NULL simhash yields a NULL hamming the uncollapsed verify
+    # drops, and simhash64 is NULL exactly when the TEXT is NULL (split of
+    # a trimmed empty string still yields one token), so the validity
+    # predicate is a plain IS NOT NULL — never the 64-bit-vote expression.
+    return collapsed_pairs(
+        df, [text_col], id_col, "narrow", pairs, "hamming", F.lit(0),
+        valid=F.col(text_col).isNotNull(), max_bucket=max_bucket,
+    )
+
+
+def _simhash_pairs(
+    df: DataFrame, text_col: str, id_col: str, max_hamming: int, bands: int,
+    max_bucket: int,
+) -> DataFrame:
+    """``simhash_near_dup_pairs``' signature + banded-Hamming body over
+    its input as given (no collapse)."""
+    sigs = _parallel_text(df, text_col, id_col).select(
         "id", simhash64(F.col("t")).alias("sim")
     )
-    # collapse_identical=False: the text collapse above already removed
+    # collapse_identical=False: the front door's text collapse removed
     # byte-identical inputs; a second signature-level collapse would only
     # catch distinct texts hashing to the same simhash (rare) for an extra
     # shuffle
@@ -1983,12 +1989,8 @@ def banded_hamming_pairs(
     that already collapsed upstream (simhash's text collapse) pass
     False."""
     if collapse_identical:
-        # PIN the collapse window output (r20); the caller's front door
-        # owns the pin registry and releases it before building ``sigs``
-        # (``multimodal.phash_near_dup``), as the minhash/simhash front
-        # doors do — releasing here would unpersist every pin the caller
-        # holds. The expression tree under the pin is the caller's
-        # signature pass — for multimodal callers a mapInPandas
+        # PIN the collapse window output (r20). The expression tree under
+        # the pin is the caller's signature pass — for multimodal callers a mapInPandas
         # decode+hash of every payload — plus the full shuffle+sort of
         # the 16-byte signature rows. The validity filter, the banded rep
         # path and the three expansion branches are separate join
@@ -2001,22 +2003,15 @@ def banded_hamming_pairs(
         # table — 24-byte cached rows — and a narrow pin would re-run the
         # Python signature pass to rebuild reps, the very cost the pin
         # deletes (phash measured 3.8 s -> 2.8 s with the full pin, r21).
-        mapping, reps = collapse_exact_groups(sigs, ["sim"], "id", pin=True)
-        rep_pairs = banded_hamming_pairs(
-            reps, max_hamming, bands, max_bucket, collapse_identical=False
+        # A NULL signature's verify hamming is NULL in the uncollapsed
+        # path, so NULL-signature groups stay out of the expansion.
+        pairs = partial(
+            banded_hamming_pairs, max_hamming=max_hamming, bands=bands,
+            max_bucket=max_bucket, collapse_identical=False,
         )
-        # NULL-signature groups generate no band rows in the uncollapsed
-        # path (shiftright(NULL) bucket is NULL -> groupBy key NULL is
-        # fine but verify hamming is NULL and filtered) — exclude those
-        # groups from the expansion for exact parity.
-        valid = reps.filter(F.col("sim").isNotNull()).select(
-            F.col("id").alias("_rep_id")
-        )
-        # no persist: mapping and valid are projections over the pinned
-        # window cache; the expansion branches re-read the cache only
-        mapping = mapping.join(valid, "_rep_id")
-        return expand_collapsed_pairs(
-            rep_pairs, mapping, "hamming", F.lit(0), max_bucket
+        return collapsed_pairs(
+            sigs, ["sim"], "id", "full", pairs, "hamming", F.lit(0),
+            valid=F.col("sim").isNotNull(), max_bucket=max_bucket,
         )
     width = 64 // bands
     mask = (1 << width) - 1

@@ -434,7 +434,7 @@ def phash_near_dup(
         release_parallel_caches,
     )
 
-    # front door: release FIRST, then the banded path pins its collapse
+    # front door: drop the previous call's pins before this call pins any
     release_parallel_caches()
     sigs = image_dhash(media).select(
         F.col("media_id").alias("id"), F.col("dhash64").alias("sim")

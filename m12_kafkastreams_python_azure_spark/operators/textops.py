@@ -1237,17 +1237,13 @@ def winnow_pairs(
     Reference parity note: the reference app has no near-dup surface at
     all (SURVEY.md §2) — this extends the training-data-pipeline tier."""
     from m12_kafkastreams_python_azure_spark.operators.dedup import (
-        collapse_reps_only,
         expansion_partitions,
-        register_parallel_cache,
+        pinned_collapse_reps,
     )
 
-    reps = register_parallel_cache(
-        collapse_reps_only(docs.select("doc_id", "text")).persist()
-    )
-    reps.count()
     return winnow_pair_scores(
-        reps, k, w, max_df, expansion_partitions(docs), threshold=threshold
+        pinned_collapse_reps(docs), k, w, max_df, expansion_partitions(docs),
+        threshold=threshold,
     )
 
 

@@ -68,17 +68,6 @@ def _minmax_norm(c: Column, cmin: float, cmax: float, bits: int) -> Column:
     )
 
 
-def _minmax_norm_sql(expr: str, cmin: float, cmax: float, bits: int) -> str:
-    top = (1 << bits) - 1
-    if cmax <= cmin:
-        return "CAST(0 AS BIGINT)"
-    return (
-        f"least(CAST({top} AS BIGINT), CAST(floor("
-        f"(CAST({expr} AS DOUBLE) - {float(cmin)!r}) / "
-        f"{float(cmax) - float(cmin)!r} * {float(top + 1)!r}) AS BIGINT))"
-    )
-
-
 def zorder_key_col(
     df: DataFrame, col_a: str, col_b: str, bits: int = ZBITS
 ) -> Column:

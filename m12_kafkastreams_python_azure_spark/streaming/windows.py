@@ -95,32 +95,3 @@ def session_counts(
             "session_value",
         )
     )
-
-
-def hotels_count_windowed(
-    projected: DataFrame,
-    ts_col: str,
-    window_len: str = "1 hour",
-    watermark: str = "2 hours",
-    rsd: float = 0.05,
-) -> DataFrame:
-    """The reference flagship aggregate with bounded state: per-window
-    category counts + approx distinct. The 100 TB-hygienic variant of the
-    unwindowed ksql table (SURVEY.md §7)."""
-    return (
-        projected.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.window(F.col(ts_col), window_len).alias("win"),
-            F.col("stay_category"),
-        )
-        .agg(
-            F.count("hotel_id").alias("hotels_amount"),
-            F.approx_count_distinct("hotel_id", rsd).alias("distinct_hotels"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            "stay_category",
-            "hotels_amount",
-            "distinct_hotels",
-        )
-    )

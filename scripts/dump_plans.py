@@ -1,5 +1,12 @@
 """Dump explain("formatted") for named queries to <out_dir>/<q>_<tag>.txt.
 
+Ids that a session assigns in creation order are normalized (expression
+ids ``#123``, ``plan_id``s, lambda variable suffixes, RDD ids, codegen
+ids and query-stage ids, which the AQE final plans inside a pinned
+intermediate number in materialization order), as is the checkout
+path, so two dumps of the same plan from different sessions or commits
+compare with a plain ``diff -r``.
+
 Usage: python scripts/dump_plans.py <out_dir> <tag> <query> [query ...]
   out_dir: directory for the plan files (created if missing)
   tag:     file suffix, e.g. 'before' or 'after'
@@ -14,11 +21,29 @@ the operator and show up as InMemoryTableScan leaves.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 from m12_kafkastreams_python_azure_spark.session import get_spark  # noqa: E402
+
+
+_SESSION_IDS = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"(lambda [a-z]+)_\d+"), r"\1_N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"codegen id : \d+"), "codegen id : N"),
+    (re.compile(r"(QueryStage\n(?:Output .*\n)?Arguments: )\d+"), r"\1N"),
+]
+
+
+def normalize(plan: str) -> str:
+    for pattern, repl in _SESSION_IDS:
+        plan = pattern.sub(repl, plan)
+    return plan.replace(_REPO, "<repo>")
 
 
 def main() -> None:
@@ -40,7 +65,7 @@ def main() -> None:
     for name in names:
         try:
             df = queries[name](spark, sf_dir)
-            plan = explain_str(df)
+            plan = normalize(explain_str(df))
         except Exception as e:  # noqa: BLE001
             plan = f"ERROR: {type(e).__name__}: {e}"
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:
