@@ -8,12 +8,39 @@ bit-stable (both sum in array order).
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
+
+
+def double_array_lit(values: list[float] | list[list[float]]) -> Column:
+    """A constant ``array<double>`` (flat list) or ``array<array<double>>``
+    (list of equal-length rows) built in one JVM call.
+
+    PySpark 4.1 spells ``F.lit(list)`` as ``array(*[lit(x) ...])``: one
+    Python->JVM round trip and one tree node per element (a 32 x 64 plane
+    matrix is ~2k round trips per call). Here the values travel as ONE
+    JSON string literal under ``from_json``, which ConstantFolding turns
+    into a single ``Literal`` — the optimized plan holds no ``from_json``,
+    also where a lambda captures the literal. ``json.dumps`` writes each
+    double as its shortest round-trip repr and Spark parses it back to
+    the same bits (-0.0, subnormals, the extremes, NaN and +-inf
+    included). Unlike ``F.lit(list)`` the column and its elements are
+    typed nullable. Ragged rows raise ``ValueError``."""
+    rows = [isinstance(v, (list, tuple)) for v in values]
+    if not any(rows):
+        return F.from_json(
+            F.lit(json.dumps([float(x) for x in values])), "array<double>"
+        )
+    if not all(rows) or len({len(v) for v in values}) != 1:
+        raise ValueError("double_array_lit needs a flat list or equal-length rows")
+    matrix = [[float(x) for x in row] for row in values]
+    return F.from_json(F.lit(json.dumps(matrix)), "array<array<double>>")
 
 
 def dot_product(a: Column | str, b: Column | str) -> Column:

@@ -2049,7 +2049,7 @@ FROM k
 C4_MIN_WORDS = 5       # C4: "only retained lines that contained at least 5 words"
 C4_MIN_KEPT_LINES = 3  # page floor (C4 uses >= 3 sentences; line analog here)
 #: placeholder blocklist — production swaps in the full list (a few thousand
-#: tokens still ships fine as ONE array literal, the F.lit(nested) law)
+#: tokens still ship fine: they ride the plan as ONE rlike pattern string)
 C4_BADWORDS = ("badword1", "badword2")
 C4_LINE_WORDS = 8      # fixture: words per synthesized line (corpus has no \n)
 C4_LOREM_LINE = "lorem ipsum dolor sit amet."

@@ -1838,29 +1838,36 @@ FROM scored, nd
 def simhash64(text_col: Column) -> Column:
     """64-bit SimHash from whitespace tokens, entirely in Catalyst.
 
-    Classic bit-vote: for each bit position p, count tokens whose
-    xxhash64 has bit p set; bit p of the simhash is 1 iff the count
-    exceeds half the token count. Expressed as 64 aggregate expressions
-    over the token-hash array (JVM-side; no Python)."""
-    toks = F.split(F.trim(text_col), r"\s+")
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    n = F.size(hashes)
+    Classic bit-vote as ONE fold over the token hashes: each token's
+    xxhash64 adds +1 to vote p when its bit p is set and -1 otherwise, and
+    bit p of the simhash is 1 iff vote p is positive — the same rule as
+    "more than half the tokens set bit p" (count_p - (n - count_p) > 0 iff
+    2 * count_p > n). The tokens are split and hashed once per row (the
+    fold's input array), and the column is built in a fixed number of JVM
+    calls. NULL text gives NULL (the fold over a NULL array)."""
+    hashes = F.transform(
+        F.split(F.trim(text_col), r"\s+"), lambda t: F.xxhash64(t)
+    )
+    one = F.lit(1).cast("long")
 
-    def _bit_set(p: int):
-        mask = F.shiftleft(F.lit(1).cast("long"), p)  # p=63 -> sign bit
-        return lambda h: h.bitwiseAND(mask) != 0
-
-    bits = [
-        F.shiftleft(
-            (F.size(F.filter(hashes, _bit_set(p))) * 2 > n).cast("long"),
-            p,
+    def vote(acc: Column, h: Column) -> Column:
+        return F.transform(
+            acc,
+            lambda v, p: v + F.when(
+                h.bitwiseAND(F.call_function("shiftleft", one, p)) != 0, 1
+            ).otherwise(-1),
         )
-        for p in range(64)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
+
+    def bits(votes: Column) -> Column:
+        set_bits = F.transform(
+            votes,
+            lambda v, p: F.when(
+                v > 0, F.call_function("shiftleft", one, p)
+            ).otherwise(F.lit(0).cast("long")),
+        )
+        return F.aggregate(set_bits, F.lit(0).cast("long"), lambda a, b: a.bitwiseOR(b))
+
+    return F.aggregate(hashes, F.array_repeat(F.lit(0), 64), vote, bits)
 
 
 def hamming64(a: Column, b: Column) -> Column:

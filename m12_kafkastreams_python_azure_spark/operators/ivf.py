@@ -28,7 +28,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from m12_kafkastreams_python_azure_spark.functions.vectors import dot_product, l2_norm
+from m12_kafkastreams_python_azure_spark.functions.vectors import (
+    dot_product,
+    double_array_lit,
+    l2_norm,
+)
 from m12_kafkastreams_python_azure_spark.operators.similarity import EMBED_DIM
 from m12_kafkastreams_python_azure_spark.sources.readers import load_table
 
@@ -38,16 +42,18 @@ def _centroid_array(centroids: list[tuple[int, list[float]]]) -> F.Column:
     broadcast-free argmax assignment (the literal ships inside the task
     binary).
 
-    The matrix ships as ONE nested-list literal zipped with the id/norm
-    literals — the expression TREE is O(1) in k (the centroids are data,
-    not tree nodes). The per-centroid ``F.array(*[F.lit(x) ...])``
-    alternative creates k*dim literal leaves, which at the sqrt(n) list
-    counts this module now defaults to (hundreds of lists) costs whole
-    seconds of driver analysis per query (same lesson as
-    similarity.lsh_sign_bits)."""
+    The matrix and the norms each ship as ONE literal built in one JVM
+    call (``double_array_lit``), zipped with the id literal, so the
+    expression tree does not grow with k*dim (the centroids are data, not
+    tree nodes). ``F.lit`` of a list costs one round trip and one tree
+    node per element — k*dim of them for the matrix, which at the sqrt(n)
+    list counts this module defaults to (hundreds of lists) costs whole
+    seconds of driver time per query (same lesson as
+    similarity.lsh_sign_bits). The ids stay ``F.lit``: k ints, and an
+    int array is not a double array."""
     cids = F.lit([int(cid) for cid, _ in centroids])
-    cvecs = F.lit([[float(x) for x in vec] for _, vec in centroids])
-    cnorms = F.lit(
+    cvecs = double_array_lit([vec for _, vec in centroids])
+    cnorms = double_array_lit(
         [float(sum(x * x for x in vec) ** 0.5) for _, vec in centroids]
     )
     vec_norm = F.zip_with(

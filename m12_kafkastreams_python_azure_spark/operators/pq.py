@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from m12_kafkastreams_python_azure_spark.functions.vectors import (
     dot_product_unrolled,
+    double_array_lit,
     l2_norm,
 )
 from m12_kafkastreams_python_azure_spark.operators.similarity import _probe_dim
@@ -83,14 +84,18 @@ def _l2sq(a: Column, b: Column) -> Column:
 
 def _codebook_lit(codebooks: list[list[list[float]]]) -> Column:
     """All m codebooks as ONE FLAT literal array<double> (row-major:
-    [(j*ksub + c)*dsub + d]). A nested array<array<array<double>>>
-    literal costs ~3x more driver time PER JOB to convert/fold (measured:
-    ~2 s vs ~0.7 s warm at 1024 doubles) — and every Lloyd iteration,
-    encode, and ADC query is its own job. Consumers slice centroid
-    vectors out arithmetically; a literal captured by a lambda is FREE to
+    [(j*ksub + c)*dsub + d]), built in one JVM call
+    (``double_array_lit``). ``F.lit`` of the list is not one node: it
+    costs one round trip and one tree node per double, ~0.7 s of driver
+    time per job at 1024 doubles (a nested array<array<array<double>>>
+    ``F.lit`` measured ~2 s) — and every Lloyd iteration, encode, and ADC
+    query is its own job. Consumers slice centroid vectors out
+    arithmetically; a literal captured by a lambda is FREE to
     re-reference (its eval returns the value — no tree to re-run), unlike
     the captured expression trees the lambda-capture trap punishes."""
-    return F.lit([x for book in codebooks for cvec in book for x in cvec])
+    return double_array_lit(
+        [x for book in codebooks for cvec in book for x in cvec]
+    )
 
 
 def _centroid_slice(flat: Column, j, c, ksub: int, dsub: int) -> Column:

@@ -25,6 +25,7 @@ from m12_kafkastreams_python_azure_spark.functions.vectors import (
     cosine_similarity,
     dot_product,
     dot_product_unrolled,
+    double_array_lit,
     l2_norm,
 )
 from m12_kafkastreams_python_azure_spark.sources.readers import load_table
@@ -331,14 +332,15 @@ def lsh_sign_bits(
 ) -> F.Column:
     """array<long> of sign bits (0/1), one per hyperplane.
 
-    All planes ship as ONE literal array<array<double>> and the per-plane
-    dot product is a single nested higher-order transform — the expression
-    TREE stays O(1) in num_planes (the planes are data, not tree nodes).
-    The naive per-plane fold-expression alternative makes Catalyst
-    analyze/codegen a tree with num_planes * dim literal leaves, which
-    costs whole seconds of driver time per query at 32+ planes."""
+    All planes ship as ONE literal array<array<double>> built in one JVM
+    call (``double_array_lit``) and the per-plane dot product is a single
+    nested higher-order transform — building the column costs a fixed
+    number of round trips whatever num_planes and dim are (the planes are
+    data, not tree nodes). ``F.lit(planes)`` would cost one round trip and
+    one tree node per double (2,048 at 32 x 64); a per-plane fold
+    expression makes Catalyst analyze/codegen num_planes * dim leaves."""
     planes = [_hyperplane(dim, plane_offset + p) for p in range(num_planes)]
-    parr = F.lit(planes)
+    parr = double_array_lit(planes)
     return F.transform(
         parr, lambda plane: (dot_product(vec_col, plane) > 0).cast("long")
     )
