@@ -20,12 +20,13 @@ def _col(c: Column | str) -> Column:
 
 def double_array_lit(values: list[float] | list[list[float]]) -> Column:
     """A constant ``array<double>`` (flat list) or ``array<array<double>>``
-    (list of equal-length rows) built in one JVM call.
+    (list of equal-length rows) built in a few JVM calls, however many
+    values it holds.
 
     PySpark 4.1 spells ``F.lit(list)`` as ``array(*[lit(x) ...])``: one
-    Python->JVM round trip and one tree node per element (a 32 x 64 plane
-    matrix is ~2k round trips per call). Here the values travel as ONE
-    JSON string literal under ``from_json``, which ConstantFolding turns
+    tree node and about four Python->JVM round trips per element (a
+    32 x 64 plane matrix costs ~8.5k round trips). Here the values
+    travel as ONE JSON string literal under ``from_json``, which ConstantFolding turns
     into a single ``Literal`` — the optimized plan holds no ``from_json``,
     also where a lambda captures the literal. ``json.dumps`` writes each
     double as its shortest round-trip repr and Spark parses it back to
@@ -34,13 +35,13 @@ def double_array_lit(values: list[float] | list[list[float]]) -> Column:
     typed nullable. Ragged rows raise ``ValueError``."""
     rows = [isinstance(v, (list, tuple)) for v in values]
     if not any(rows):
-        return F.from_json(
-            F.lit(json.dumps([float(x) for x in values])), "array<double>"
-        )
-    if not all(rows) or len({len(v) for v in values}) != 1:
+        data, schema = [float(x) for x in values], "array<double>"
+    elif all(rows) and len({len(v) for v in values}) == 1:
+        data = [[float(x) for x in row] for row in values]
+        schema = "array<array<double>>"
+    else:
         raise ValueError("double_array_lit needs a flat list or equal-length rows")
-    matrix = [[float(x) for x in row] for row in values]
-    return F.from_json(F.lit(json.dumps(matrix)), "array<array<double>>")
+    return F.from_json(F.lit(json.dumps(data)), schema)
 
 
 def dot_product(a: Column | str, b: Column | str) -> Column:

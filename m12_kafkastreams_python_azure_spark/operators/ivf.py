@@ -42,10 +42,10 @@ def _centroid_array(centroids: list[tuple[int, list[float]]]) -> F.Column:
     broadcast-free argmax assignment (the literal ships inside the task
     binary).
 
-    The matrix and the norms each ship as ONE literal built in one JVM
-    call (``double_array_lit``), zipped with the id literal, so the
+    The matrix and the norms each ship as ONE literal built in a few JVM
+    calls (``double_array_lit``), zipped with the id literal, so the
     expression tree does not grow with k*dim (the centroids are data, not
-    tree nodes). ``F.lit`` of a list costs one round trip and one tree
+    tree nodes). ``F.lit`` of a list costs round trips and one tree
     node per element — k*dim of them for the matrix, which at the sqrt(n)
     list counts this module defaults to (hundreds of lists) costs whole
     seconds of driver time per query (same lesson as

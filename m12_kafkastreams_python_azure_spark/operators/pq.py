@@ -84,9 +84,9 @@ def _l2sq(a: Column, b: Column) -> Column:
 
 def _codebook_lit(codebooks: list[list[list[float]]]) -> Column:
     """All m codebooks as ONE FLAT literal array<double> (row-major:
-    [(j*ksub + c)*dsub + d]), built in one JVM call
+    [(j*ksub + c)*dsub + d]), built in a few JVM calls
     (``double_array_lit``). ``F.lit`` of the list is not one node: it
-    costs one round trip and one tree node per double, ~0.7 s of driver
+    costs round trips and one tree node per double, ~0.7 s of driver
     time per job at 1024 doubles (a nested array<array<array<double>>>
     ``F.lit`` measured ~2 s) — and every Lloyd iteration, encode, and ADC
     query is its own job. Consumers slice centroid vectors out

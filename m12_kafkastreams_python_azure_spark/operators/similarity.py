@@ -332,11 +332,11 @@ def lsh_sign_bits(
 ) -> F.Column:
     """array<long> of sign bits (0/1), one per hyperplane.
 
-    All planes ship as ONE literal array<array<double>> built in one JVM
-    call (``double_array_lit``) and the per-plane dot product is a single
+    All planes ship as ONE literal array<array<double>> built in a few JVM
+    calls (``double_array_lit``) and the per-plane dot product is a single
     nested higher-order transform — building the column costs a fixed
     number of round trips whatever num_planes and dim are (the planes are
-    data, not tree nodes). ``F.lit(planes)`` would cost one round trip and
+    data, not tree nodes). ``F.lit(planes)`` would cost round trips and
     one tree node per double (2,048 at 32 x 64); a per-plane fold
     expression makes Catalyst analyze/codegen num_planes * dim leaves."""
     planes = [_hyperplane(dim, plane_offset + p) for p in range(num_planes)]
